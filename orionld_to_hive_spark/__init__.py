@@ -17,6 +17,12 @@ Layout:
     plans/        — plan-inspection helpers (pushdown/broadcast assertions)
     registry.py   — name → (spark, sf_dir) -> DataFrame registry
     oracles.py    — DuckDB oracle SQL twins for the registry
+    zipimport_cache.py — per-task zip directory re-read skip, installed
+                    when a Python worker imports the package
 """
 
+from orionld_to_hive_spark import zipimport_cache as _zipimport_cache
+
 __version__ = "0.1.0"
+
+_zipimport_cache.install()

@@ -29,10 +29,28 @@ additionally pinned by hand-built code streams (units) that are
 independent of the compressor, mirroring the JPEG test strategy.
 
 Scale shape: synth and decode are both partition-local Arrow-batched
-`mapInPandas` stages with the same explicit core-spreading
-repartition as the JPEG path (the codec is CPU-bound Python; on a
-real cluster the exchange is noise next to the decode work). The
-frame fan-out happens inside the UDF batch — no shuffle, no UDTF.
+`mapInPandas` stages over `warehouse.load_docs_spread`, the same
+layout-adaptive, size-capped core spread every walker uses (the codec
+is CPU-bound Python; on a real cluster the input already has split
+parallelism and no exchange is added). The frame fan-out happens
+inside the UDF batch — no shuffle, no UDTF.
+
+LZW cost: the codec is pure Python, so its inner loops are written
+for the interpreter. The decoder appends each table entry to one
+bytearray and turns it into the result array once (it used to make a
+numpy call plus a slice assignment per code: ~272k of each per task
+at sf0.1). The encoder keys its table by the int
+`(prefix_code << 8) | byte` instead of concatenated bytes and packs
+codes inline, flushing whole bytes as they fill. Both produce the same
+bytes as before (pinned in tests/test_gif_lzw_pins.py). On a 4-core
+x86 host, one task's share of the sf0.1 corpus (1,250 docs, ~2,050
+frames) decodes in 0.32-0.36 s instead of 1.24-1.29 s and
+synthesizes in 0.27-0.30 s instead of 0.64-0.91 s.
+
+The other fixed cost of this query is not in this module: each Python
+task used to spend 0.26-0.55 s re-reading zip directories before the
+UDF ran. `orionld_to_hive_spark.zipimport_cache` explains and removes
+it.
 
 Oracle strategy (same closed-form trick as JPEG/PNG/WAV): the synth
 fixture paints each 16x16 frame with the document's utf-8 bytes
@@ -52,13 +70,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from orionld_to_hive_spark.operators.multimodal import PNG_DARK
-from orionld_to_hive_spark.sources.warehouse import load_table
+from orionld_to_hive_spark.sources.warehouse import load_docs_spread
 
 _MAX_CODE_WIDTH = 12
 _TABLE_LIMIT = 1 << _MAX_CODE_WIDTH  # 4096
 
 # interlace passes: (first row, row step) per GIF89a appendix E
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
+
+_LITERALS = [bytes([i]) for i in range(256)]
 
 
 class GifImage(NamedTuple):
@@ -84,39 +104,44 @@ def lzw_decode(data: bytes, min_code_size: int, max_pixels: int) -> np.ndarray:
 
     `max_pixels` bounds the output (w*h of the image descriptor) so a
     corrupt stream cannot balloon memory; decoding stops once the
-    image is full (encoders may legally omit the explicit EOI)."""
+    image is full (encoders may legally omit the explicit EOI).
+
+    Entries are appended to one bytearray that becomes the result
+    array once at the end (no per-code numpy call)."""
     if not 2 <= min_code_size <= 8:
         raise ValueError(f"bad LZW minimum code size {min_code_size}")
     clear = 1 << min_code_size
     eoi = clear + 1
-    out = np.empty(max_pixels, dtype=np.uint8)
-    n_out = 0
+    base = _LITERALS[:clear] + [b"", b""]
+    out = bytearray()
 
-    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
+    table = base[:]
     width = min_code_size + 1
+    mask = (1 << width) - 1
     next_code = eoi + 1
     prev: bytes | None = None
 
     acc = 0
     nbits = 0
     pos = 0
+    n_data = len(data)
     while True:
         while nbits < width:
-            if pos >= len(data):
-                if n_out == max_pixels:
-                    out_full = out
-                    return out_full
+            if pos >= n_data:
+                if len(out) == max_pixels:
+                    return np.frombuffer(out, dtype=np.uint8)
                 raise ValueError("unexpected end of LZW stream")
             acc |= data[pos] << nbits
             nbits += 8
             pos += 1
-        code = acc & ((1 << width) - 1)
+        code = acc & mask
         acc >>= width
         nbits -= width
 
         if code == clear:
-            table = [bytes([i]) for i in range(clear)] + [b"", b""]
+            table = base[:]
             width = min_code_size + 1
+            mask = (1 << width) - 1
             next_code = eoi + 1
             prev = None
             continue
@@ -138,19 +163,19 @@ def lzw_decode(data: bytes, min_code_size: int, max_pixels: int) -> np.ndarray:
         else:
             raise ValueError(f"LZW code {code} beyond table (next={next_code})")
         # width grows when the NEXT code to assign no longer fits
-        if next_code == (1 << width) and width < _MAX_CODE_WIDTH:
+        if next_code > mask and width < _MAX_CODE_WIDTH:
             width += 1
+            mask = (1 << width) - 1
         prev = entry
 
-        if n_out + len(entry) > max_pixels:
-            raise ValueError("LZW stream overflows the image rectangle")
-        out[n_out : n_out + len(entry)] = np.frombuffer(entry, dtype=np.uint8)
-        n_out += len(entry)
-        if n_out == max_pixels:
+        out += entry
+        if len(out) >= max_pixels:
+            if len(out) > max_pixels:
+                raise ValueError("LZW stream overflows the image rectangle")
             break
-    if n_out != max_pixels:
-        raise ValueError(f"LZW stream short: {n_out} of {max_pixels} pixels")
-    return out
+    if len(out) != max_pixels:
+        raise ValueError(f"LZW stream short: {len(out)} of {max_pixels} pixels")
+    return np.frombuffer(out, dtype=np.uint8)
 
 
 def lzw_encode(indices: np.ndarray, min_code_size: int) -> bytes:
@@ -158,59 +183,75 @@ def lzw_encode(indices: np.ndarray, min_code_size: int) -> bytes:
     encoder. Emits an initial CLEAR, grows code width in lockstep
     with the decoder's table, and emits CLEAR + resets when the table
     reaches 4096 entries. Roundtrip-pinned against lzw_decode AND the
-    decoder is separately pinned by hand-built streams (tests)."""
+    decoder is separately pinned by hand-built streams (tests); the
+    output bytes are pinned in tests/test_gif_lzw_pins.py.
+
+    The table maps the int `(prefix_code << 8) | byte` to the code of
+    that string, so the current prefix is carried as its code and a
+    literal's code is its byte value. Codes are packed LSB-first and
+    whole bytes are flushed as they fill."""
     if not 2 <= min_code_size <= 8:
         raise ValueError(f"bad LZW minimum code size {min_code_size}")
     clear = 1 << min_code_size
     eoi = clear + 1
+    data = indices.astype(np.uint8).tobytes()
+    if data and max(data) >= clear:
+        raise ValueError(
+            f"palette index {max(data)} needs more than {min_code_size} bits"
+        )
 
     out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
     width = min_code_size + 1
+    acc = clear  # the initial CLEAR, already packed
+    nbits = width
     next_code = eoi + 1
+    # the decoder's table lags the encoder's by one entry (it
+    # reconstructs entry e_k only upon receiving code c_{k+1}), so the
+    # encoder bumps its OUTPUT width one entry later than the decoder's
+    # 2^w rule — emit at the width the decoder will read with
+    bump = (1 << width) + 1
+    table: dict[int, int] = {}
 
-    emit(clear, width)
-    data = indices.astype(np.uint8).tobytes()
     if data:
-        w = data[:1]
-        for j in range(1, len(data)):
-            k = data[j : j + 1]
-            if w + k in table:
-                w = w + k
+        w = data[0]
+        for k in data[1:]:
+            key = (w << 8) | k
+            code = table.get(key)
+            if code is not None:
+                w = code
                 continue
-            emit(table[w], width)
+            acc |= w << nbits
+            nbits += width
+            while nbits >= 8:
+                out.append(acc & 0xFF)
+                acc >>= 8
+                nbits -= 8
             if next_code < _TABLE_LIMIT:
-                table[w + k] = next_code
+                table[key] = next_code
                 next_code += 1
-                # the decoder's table lags the encoder's by one entry
-                # (it reconstructs entry e_k only upon receiving code
-                # c_{k+1}), so the encoder bumps its OUTPUT width one
-                # entry later than the decoder's 2^w rule — emit at
-                # the width the decoder will read with
-                if next_code == (1 << width) + 1 and width < _MAX_CODE_WIDTH:
+                if next_code == bump and width < _MAX_CODE_WIDTH:
                     width += 1
+                    bump = (1 << width) + 1
             else:
-                emit(clear, width)
-                table = {bytes([i]): i for i in range(clear)}
+                acc |= clear << nbits
+                nbits += width
+                while nbits >= 8:
+                    out.append(acc & 0xFF)
+                    acc >>= 8
+                    nbits -= 8
+                table = {}
                 width = min_code_size + 1
                 next_code = eoi + 1
+                bump = (1 << width) + 1
             w = k
-        emit(table[w], width)
-    emit(eoi, width)
-    if nbits:
+        acc |= w << nbits
+        nbits += width
+    acc |= eoi << nbits
+    nbits += width
+    while nbits > 0:
         out.append(acc & 0xFF)
+        acc >>= 8
+        nbits -= 8
     return bytes(out)
 
 
@@ -562,19 +603,11 @@ def _gif_synth_batches(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]"
         yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
 
 
-def _gif_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-
 def gif_assets_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents → animated-GIF assets, as a standalone frame (test /
     composition surface; the registry queries use the fused
     single-crossing paths)."""
-    return _gif_docs(spark, sf_dir).mapInPandas(
+    return load_docs_spread(spark, sf_dir).mapInPandas(
         _gif_synth_batches, _ASSET_SCHEMA
     )
 
@@ -618,7 +651,7 @@ def gif_frame_stats(df: DataFrame) -> DataFrame:
 def multimodal_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fused single-crossing path (r14 second pass): synth + decode
     # composed in-process — see _gif_synth_batches
-    return _gif_docs(spark, sf_dir).mapInPandas(
+    return load_docs_spread(spark, sf_dir).mapInPandas(
         lambda it: _gif_frame_batches(_gif_synth_batches(it)),
         GIF_FRAME_SCHEMA,
     )
@@ -650,7 +683,7 @@ def gif_anim_summary(df: DataFrame) -> DataFrame:
 
 def multimodal_gif_anim_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fused single-crossing path (r14 second pass)
-    return _gif_docs(spark, sf_dir).mapInPandas(
+    return load_docs_spread(spark, sf_dir).mapInPandas(
         lambda it: _gif_summary_batches(_gif_synth_batches(it)),
         GIF_SUMMARY_SCHEMA,
     )
@@ -736,7 +769,7 @@ def multimodal_gif_selective_frames(spark: SparkSession, sf_dir: str) -> DataFra
             )
             yield pdf[nf >= 2]
 
-    return _gif_docs(spark, sf_dir).mapInPandas(
+    return load_docs_spread(spark, sf_dir).mapInPandas(
         lambda it: _gif_frame_batches(meta_filter(_gif_synth_batches(it))),
         GIF_FRAME_SCHEMA,
     )

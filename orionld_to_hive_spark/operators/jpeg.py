@@ -45,6 +45,7 @@ north-star capability per SURVEY.md §6/BASELINE.json.
 
 from __future__ import annotations
 
+import functools
 import struct
 from typing import Iterator, NamedTuple
 
@@ -59,7 +60,7 @@ from orionld_to_hive_spark.operators.multimodal import (
     PNG_STATS_SCHEMA,
     _pad_raster,
 )
-from orionld_to_hive_spark.sources.warehouse import load_table
+from orionld_to_hive_spark.sources.warehouse import load_docs_spread
 
 # Zig-zag index: ZIGZAG[k] = raster position (row*8+col) of the k-th
 # coefficient in transmission order (spec Figure 5).
@@ -433,7 +434,11 @@ def _decode_jpeg_impl(payload: bytes) -> JpegImage:
 # streams in tests/test_opt_r14.py (and every pre-existing jpeg test
 # now exercises the dispatch).
 
-_LUT16_CACHE: dict = {}
+# Each entry holds two 64K int16 arrays (256 KiB), so the cache a reused
+# Python worker keeps for its lifetime is bounded: the corpus needs a
+# handful of tables, and an adversarial scan of distinct tables only
+# cycles the least recently used ones out.
+_LUT16_CACHE_MAX = 16
 
 
 def _lut16(table) -> tuple:
@@ -443,18 +448,18 @@ def _lut16(table) -> tuple:
     disjoint. Cached by table content (tables are rebuilt per payload
     but shared across a corpus)."""
     _lut, slow = table
-    key = tuple(sorted(slow.items()))
-    hit = _LUT16_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return _lut16_for(tuple(sorted(slow.items())))
+
+
+@functools.lru_cache(maxsize=_LUT16_CACHE_MAX)
+def _lut16_for(codes: tuple) -> tuple:
     val = np.zeros(1 << 16, dtype=np.int16)
     ln = np.zeros(1 << 16, dtype=np.int16)
-    for (length, code), v in slow.items():
+    for (length, code), v in codes:
         base = code << (16 - length)
         span = 1 << (16 - length)
         val[base : base + span] = v
         ln[base : base + span] = length
-    _LUT16_CACHE[key] = (val, ln)
     return val, ln
 
 
@@ -1537,20 +1542,6 @@ _ASSET_SCHEMA = T.StructType(
 )
 
 
-def _spread_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, text) spread across the session's cores — the local
-    corpus arrives as one parquet split, which would otherwise pin the
-    CPU-bound codec stage to a single worker (measured 22 s → 2.8 s at
-    sf0.1); on a real cluster the input already has file-split
-    parallelism and the round-robin exchange is noise next to the
-    codec work."""
-    return (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-
 def _synth_batches(encoder):
     """Batch generator: (doc_id, text) pdfs → asset pdfs through
     `encoder`. Module-level so the fused query paths can compose it
@@ -1582,7 +1573,7 @@ def _assets_from_documents(
     """Documents → flat-block JPEG assets through `encoder`, as a
     standalone asset frame (test/composition surface; the registry
     stats queries use the fused single-crossing path below)."""
-    return _spread_docs(spark, sf_dir).mapInPandas(
+    return load_docs_spread(spark, sf_dir).mapInPandas(
         _synth_batches(encoder), _ASSET_SCHEMA
     )
 
@@ -1674,7 +1665,7 @@ def _fused_pixel_stats(spark: SparkSession, sf_dir: str, encoder) -> DataFrame:
     fixture round-trip was pure overhead. Staged ≡ fused pinned in
     tests/test_opt_r14.py; the oracle is unchanged."""
     synth = _synth_batches(encoder)
-    return _spread_docs(spark, sf_dir).mapInPandas(
+    return load_docs_spread(spark, sf_dir).mapInPandas(
         lambda it: _stats_batches(synth(it)), PNG_STATS_SCHEMA
     )
 
@@ -1887,7 +1878,7 @@ def _jpeg_selective(spark, sf_dir: str, min_rows: int) -> DataFrame:
     round-trips are gone."""
     synth = _synth_batches(encode_jpeg_gray_flat)
     dims = _dims_filter_batches(min_rows)
-    return _spread_docs(spark, sf_dir).mapInPandas(
+    return load_docs_spread(spark, sf_dir).mapInPandas(
         lambda it: _stats_batches(dims(synth(it))), PNG_STATS_SCHEMA
     )
 

@@ -17,6 +17,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the package: Python workers import it from here
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "orionld_to_hive_spark",
@@ -48,7 +51,13 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    paths = [p for p in conf.get(key, "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        paths.append(_PACKAGE_ROOT)
+    conf[key] = os.pathsep.join(paths)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -511,3 +511,43 @@ def test_dc_fast_decode_adversarial_and_fallback(monkeypatch):
         J.encode_jpeg_gray_flat(np.frombuffer(b"hello world", dtype=np.uint8))
     )
     assert img.channels == 1 and calls == [True]
+
+
+def test_lut16_cache_is_bounded_and_decode_stays_exact(monkeypatch):
+    import numpy as np
+
+    from orionld_to_hive_spark.operators import jpeg as J
+
+    raw = np.frombuffer(bytes(range(256)) * 2, dtype=np.uint8)
+    base = J.encode_jpeg_gray_flat(raw)
+    expected = _decode_both_ways(monkeypatch, base).samples
+
+    def dht(dc_bits, dc_vals):
+        return J._seg(
+            0xC4,
+            bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals)
+            + bytes([0x10]) + bytes(J._ENC_AC_BITS) + bytes(J._ENC_AC_VALS),
+        )
+
+    old = dht(J._ENC_DC_BITS, J._ENC_DC_VALS)
+    assert base.count(old) == 1
+    # one extra, never-used DC code per variant (length 5..16, value
+    # 10 or 11): every variant is a distinct table, while the 4-bit
+    # codes the scan uses stay the same, so every decode is identical
+    variants = []
+    for extra_len in range(5, 17):
+        for extra_val in (10, 11):
+            bits = list(J._ENC_DC_BITS)
+            bits[extra_len - 1] += 1
+            variants.append(
+                base.replace(old, dht(bits, J._ENC_DC_VALS + [extra_val]))
+            )
+    assert len(variants) > J._LUT16_CACHE_MAX
+    misses = J._lut16_for.cache_info().misses
+    for payload in variants + variants[:2]:
+        assert np.array_equal(
+            _decode_both_ways(monkeypatch, payload).samples, expected
+        )
+        assert J._lut16_for.cache_info().currsize <= J._LUT16_CACHE_MAX
+    # the first two were evicted and rebuilt, not served stale
+    assert J._lut16_for.cache_info().misses - misses >= len(variants) + 2
