@@ -780,7 +780,7 @@ def _ivf_multiprobe_topk(
     centroids = _kmeans_fit_centroids(
         spark, emb, k=ANN_IVF_K, fast=True, n_rows=n_rows
     )
-    cdf = spark.createDataFrame(centroids, schema="cid INT, cvec ARRAY<DOUBLE>")
+    cdf = _centroid_frame(spark, centroids)
     asg = _assign_auto(emb, centroids).select("vec_id", "vec", "cid")
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qv")
@@ -1213,8 +1213,27 @@ def _kmeans_fit(spark: SparkSession, emb: DataFrame, k: int = KMEANS_K,
     (`_assign_auto`: bucketed branch-and-bound for K ≥ _BUCKETED_MIN_K,
     plain n×K below) — used by SemDeDup, whose K grows with the
     corpus. See `_kmeans_fit_centroids` for the n_rows gate."""
+    return _centroid_frame(
+        spark, _kmeans_fit_centroids(spark, emb, k, fast, n_rows)
+    )
+
+
+def _centroid_frame(spark: SparkSession, centroids: list) -> DataFrame:
+    """(cid INT, cvec ARRAY<DOUBLE>) frame of an in-process centroid
+    list, built from an Arrow table so it plans as a LocalTableScan: a
+    Python list plans a `Scan ExistingRDD`, served by a second Python
+    daemon and its own workers."""
+    import pyarrow as pa
+
     return spark.createDataFrame(
-        _kmeans_fit_centroids(spark, emb, k, fast, n_rows),
+        pa.table(
+            {
+                "cid": pa.array([c for c, _ in centroids], pa.int32()),
+                "cvec": pa.array(
+                    [v for _, v in centroids], pa.list_(pa.float64())
+                ),
+            }
+        ),
         schema="cid INT, cvec ARRAY<DOUBLE>",
     )
 
@@ -1223,9 +1242,9 @@ def _kmeans_fit_centroids(
     spark: SparkSession, emb: DataFrame, k: int = KMEANS_K,
     fast: bool = False, n_rows: int | None = None,
 ) -> list:
-    """Driver-side centroid list of the Lloyd fit (the frame `
-    _kmeans_fit` returns is createDataFrame of exactly this — callers
-    that need both skip a LocalTableScan collect round-trip).
+    """In-process centroid list of the Lloyd fit (the frame
+    `_kmeans_fit` returns is `_centroid_frame` of exactly this — callers
+    that need both skip collecting that frame back).
 
     n_rows gate (r14 second pass, guide §2.4 "remove shuffles/passes
     outright"): when the caller can prove the working set is small —
@@ -1255,7 +1274,7 @@ def _kmeans_fit_centroids(
             # means fused in a single batch loop — see _fit_round_means
             centroids = _fit_round_means(emb, centroids)
             continue
-        cdf = spark.createDataFrame(centroids, schema="cid INT, cvec ARRAY<DOUBLE>")
+        cdf = _centroid_frame(spark, centroids)
         assigned = _assign(emb, cdf)
         means = (
             assigned
@@ -1573,7 +1592,7 @@ def semdedup_prune_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = _kmeans_fit_centroids(
         spark, emb, k=_semdedup_k(n), fast=True, n_rows=n
     )
-    cdf = spark.createDataFrame(centroids, schema="cid INT, cvec ARRAY<DOUBLE>")
+    cdf = _centroid_frame(spark, centroids)
     # Pre-normalize once (n rows, not n²/K pairs): every pair score is
     # then a SINGLE dot fold instead of dot + two norms, and each
     # unordered pair is evaluated exactly once. The oracle performs

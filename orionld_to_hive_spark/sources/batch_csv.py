@@ -5,7 +5,9 @@ biggest throughput sin — reference `insert.py:83-95`).
 One declarative job: glob-scan all measurement files (S1/S2), drop
 malformed lines (P7) and nulls (P5), seeded-sample (P6), infer
 (room, sensor) identity from the FILENAME (F13 — reference
-`insert.py:35-47` encodes identity in `{Room}_{Sensor}.csv` names),
+`insert.py:35-47` encodes identity in `{Room}_{Sensor}.csv` names;
+read from the scan's `_metadata.file_name`, the last path segment, so
+the per-row regex scans the short name rather than the full URI),
 synthesize the entity key (F5), pivot each sensor reading into the
 sparse wide readings schema (SURVEY.md §1.1), and write once,
 partitioned by room and sorted by ts within files for row-group
@@ -37,7 +39,10 @@ def read_raw_measurements(spark: SparkSession, glob_path: str) -> DataFrame:
         .option("mode", "DROPMALFORMED")
         .csv(glob_path)
     )
-    fname = F.input_file_name()
+    # the pattern's classes exclude '/' and it is anchored at '$', so its
+    # match always lies inside the last path segment: the bare file name
+    # gives the same identity as the full URI, with less to scan per row
+    fname = F.col("_metadata.file_name")
     return df.select(
         F.lower(F.regexp_extract(fname, _FILE_RE, 1)).alias("room"),
         F.lower(F.regexp_extract(fname, _FILE_RE, 2)).alias("sensor"),

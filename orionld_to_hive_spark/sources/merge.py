@@ -15,7 +15,14 @@ call MERGE INTO with copy-on-write:
      existing at equal version);
   4. dynamic partition-overwrite of exactly those partitions
      (`overwrite_partitions`) — untouched partitions keep their files
-     byte-for-byte (asserted by mtime in tests).
+     byte-for-byte (asserted by mtime in tests). The write observes
+     which touched partitions still hold rows (`DataFrame.observe`),
+     so the latest-wins plan runs once; a touched partition that lost
+     every row has its directory deleted afterwards.
+
+The update batch is persisted for the duration of the merge (unless
+the caller already cached it), so steps 1 and 3 share one evaluation
+of the caller's plan.
 
 Scale: cost is O(touched partitions + update batch), independent of
 table size. The latest-wins dedup is one window over (key) within the
@@ -26,7 +33,8 @@ key to make this shuffle-free; the warehouse's bucketed path
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from orionld_to_hive_spark.sources.warehouse import overwrite_partitions
@@ -274,192 +282,212 @@ def merge_upsert(
                 f"delete_col {delete_col!r} must be a dedicated marker "
                 "column, not a key/version/partition column"
             )
-    # Alongside each raw partition value, collect Spark's OWN string
-    # rendering of it (cast-to-string): the emptied-directory delete at
-    # the bottom must reproduce the writer's directory naming exactly,
-    # and Python str() diverges from it for non-string types (True vs
-    # 'true' for booleans, microsecond formatting for timestamps).
-    touched = updates.select(
-        *partition_cols,
-        *[
-            F.col(c).cast("string").alias(f"__str_{c}")
-            for c in partition_cols
-        ],
-    ).distinct()
-    touched_rows = touched.collect()  # small: one row per touched partition
-    if not touched_rows:
-        return 0
-    for r in touched_rows:
-        bad = [c for c in partition_cols if r[c] is None]
-        if bad:
-            raise ValueError(
-                f"NULL partition value(s) {bad} in update batch — "
-                "partition columns must be non-NULL for copy-on-write MERGE"
-            )
-
-    # ---- single-writer critical section -------------------------------
-    # Everything between the target read and the emptied-partition
-    # delete is read-modify-write and must not interleave with another
-    # writer (shared across merge_upsert and delete_where — they mutate
-    # the same partitions, so they exclude each other too).
-    lock_fs, lock, lock_mtime = _acquire_lock(
-        spark, target_path, break_stale_lock_s
-    )
+    # The touched-partition collect, the stability check and the
+    # latest-wins write all read the batch: evaluate the caller's plan
+    # once. A cache the caller set up is theirs to release.
+    owns_cache = updates.storageLevel == StorageLevel.NONE
+    if owns_cache:
+        updates = updates.persist()
     try:
-        # mergeSchema only when evolving: it reads every file footer,
-        # which a 100 TB table should not pay on the default path
-        target = (
-            spark.read.option("mergeSchema", "true").parquet(target_path)
-            if schema_evolution
-            else spark.read.parquet(target_path)
-        )
-
-        # ---- schema contract -----------------------------------------
-        if delete_col is not None and delete_col in target.columns:
-            # the table PERSISTS its tombstones (streaming/cdc.py) —
-            # destructive apply would filter out winning persisted
-            # tombstones (reopening the resurrection window) and drop
-            # the marker column from rewritten partitions only,
-            # diverging per-partition schemas. Deletes on such tables
-            # are plain merges of marker rows; purging is
-            # delete_where/purge_tombstones' job.
-            raise ValueError(
-                f"delete_col {delete_col!r} is a column of the TARGET "
-                "table (persisted tombstones) — merge the marker rows "
-                "without delete_col and purge via purge_tombstones()"
-            )
-        lost = [c for c in target.columns if c not in updates.columns]
-        if lost:
-            raise ValueError(
-                f"update batch is missing target column(s) {lost}: rows "
-                "are replaced whole, so merging would drop them from "
-                "every rewritten partition"
-            )
-        new_cols = [
-            c
-            for c in updates.columns
-            if c not in target.columns and c != delete_col
-        ]
-        if new_cols and not schema_evolution:
-            raise ValueError(
-                f"update batch adds new column(s) {new_cols}; pass "
-                "schema_evolution=True to evolve the table"
-            )
-
-        # touched-partition predicate: a disjunction of partition-value
-        # conjunctions, which Catalyst folds into partition pruning
-        # (PartitionFilters in the scan). eqNullSafe so that target rows
-        # sitting in a NULL partition (written before the non-NULL guard, or
-        # by another writer) evaluate to a definite false, not NULL — the
-        # stability check below negates this predicate, and ~NULL would
-        # silently drop those rows from the foreign set (r5 ADVICE fix; the
-        # old `isin` formulation had exactly that blind spot).
-        pred = None
+        # Alongside each raw partition value, collect Spark's OWN string
+        # rendering of it (cast-to-string): the emptied-directory delete at
+        # the bottom must reproduce the writer's directory naming exactly,
+        # and Python str() diverges from it for non-string types (True vs
+        # 'true' for booleans, microsecond formatting for timestamps).
+        touched = updates.select(
+            *partition_cols,
+            *[
+                F.col(c).cast("string").alias(f"__str_{c}")
+                for c in partition_cols
+            ],
+        ).distinct()
+        touched_rows = touched.collect()  # small: one row per touched partition
+        if not touched_rows:
+            return 0
         for r in touched_rows:
-            conj = None
-            for c in partition_cols:
-                term = F.col(c).eqNullSafe(F.lit(r[c]))
-                conj = term if conj is None else (conj & term)
-            pred = conj if pred is None else (pred | conj)
-
-        if check_partition_stability:
-            # keys present in the table but owned by a NON-touched partition
-            # (including a NULL one) must not appear in the update batch.
-            foreign = target.select(*key_cols, *partition_cols).filter(~pred)
-            movers = (
-                updates.select(*key_cols)
-                .distinct()
-                .join(foreign, list(key_cols), "inner")
-                .limit(5)
-                .collect()
-            )
-            if movers:
+            bad = [c for c in partition_cols if r[c] is None]
+            if bad:
                 raise ValueError(
-                    "partition-unstable keys (exist in a partition the batch "
-                    f"does not touch): {[tuple(m[k] for k in key_cols) for m in movers]}"
+                    f"NULL partition value(s) {bad} in update batch — "
+                    "partition columns must be non-NULL for copy-on-write MERGE"
                 )
 
-        # Align the read-back slice to the update batch's schema: partition
-        # values live in directory names, and Spark's partition-type
-        # inference only covers numeric/date/timestamp/string — a boolean
-        # (or other uninferred) partition column reads back as STRING and
-        # would fail the union below. The cast is a no-op where types
-        # already match. Evolved-in columns the target has never seen
-        # read back as typed NULLs (add-column semantics).
-        existing = target.filter(pred).select(
-            *[
-                (
-                    F.col(f.name).cast(f.dataType)
-                    if f.name in target.columns
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in updates.schema.fields
-            ]
+        # ---- single-writer critical section -------------------------------
+        # Everything between the target read and the emptied-partition
+        # delete is read-modify-write and must not interleave with another
+        # writer (shared across merge_upsert and delete_where — they mutate
+        # the same partitions, so they exclude each other too).
+        lock_fs, lock, lock_mtime = _acquire_lock(
+            spark, target_path, break_stale_lock_s
         )
-
-        merged = existing.withColumn("_src", F.lit(0)).unionByName(
-            updates.withColumn("_src", F.lit(1))
-        )
-        # Window order must determinize the winner for ANY input, not just
-        # well-behaved ones: a replayed batch can carry the same key twice at
-        # the same version (even in different partitions). The plan below
-        # executes twice — once for the remaining-partitions collect, once
-        # for the write — so a tie left to shuffle fetch order could let the
-        # two executions pick DIFFERENT winners, and the emptied-partition
-        # delete would then remove the directory the write populated. The
-        # row-hash tail makes row_number a pure function of row values.
-        # xxhash64 rejects map-typed columns at analysis time; for schemas
-        # containing one, hash the row's JSON rendering instead (slower, but
-        # merge isn't a hot path and the determinism guarantee must hold for
-        # every schema the warehouse accepts).
-        row_cols = [F.col(c) for c in updates.columns]
-        if any("map<" in f.dataType.simpleString() for f in updates.schema.fields):
-            tiebreak = F.xxhash64(F.to_json(F.struct(*row_cols)))
-        else:
-            tiebreak = F.xxhash64(*row_cols)
-        w = Window.partitionBy(*key_cols).orderBy(
-            F.col(version_col).desc(),
-            F.col("_src").desc(),
-            tiebreak,
-        )
-        latest = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_src")
-        )
-        if delete_col is not None:
-            # a winning tombstone removes its key from the rewritten
-            # slice; existing rows carry a NULL marker (aligned above)
-            # which coalesces to "keep". The marker never hits disk.
-            latest = latest.filter(
-                ~F.coalesce(F.col(delete_col).cast("boolean"), F.lit(False))
-            ).drop(delete_col)
-        latest = latest.persist()  # one evaluation shared by collect + write
         try:
-            # one row per surviving touched partition — bounded by the
-            # touched count, so the collect is driver-safe at warehouse scale
-            remaining = {
-                tuple(r[c] for c in partition_cols)
-                for r in latest.select(*partition_cols).distinct().collect()
-            }
-            overwrite_partitions(latest, target_path, partition_cols)
-        finally:
-            latest.unpersist()
+            # mergeSchema only when evolving: it reads every file footer,
+            # which a 100 TB table should not pay on the default path
+            target = (
+                spark.read.option("mergeSchema", "true").parquet(target_path)
+                if schema_evolution
+                else spark.read.parquet(target_path)
+            )
 
-        # clear partitions the merge emptied (every row lost latest-wins to
-        # a row in another touched partition): dynamic overwrite never saw
-        # them, so delete their directories. Write-then-delete order keeps
-        # the table recoverable if the write fails mid-merge. Hadoop FS API,
-        # so the same code path works on HDFS/S3A, not just local disk.
-        emptied = [
-            r
-            for r in touched_rows
-            if tuple(r[c] for c in partition_cols) not in remaining
-        ]
-        _delete_partition_dirs(spark, target_path, partition_cols, emptied)
-        return len(touched_rows)
+            # ---- schema contract -----------------------------------------
+            if delete_col is not None and delete_col in target.columns:
+                # the table PERSISTS its tombstones (streaming/cdc.py) —
+                # destructive apply would filter out winning persisted
+                # tombstones (reopening the resurrection window) and drop
+                # the marker column from rewritten partitions only,
+                # diverging per-partition schemas. Deletes on such tables
+                # are plain merges of marker rows; purging is
+                # delete_where/purge_tombstones' job.
+                raise ValueError(
+                    f"delete_col {delete_col!r} is a column of the TARGET "
+                    "table (persisted tombstones) — merge the marker rows "
+                    "without delete_col and purge via purge_tombstones()"
+                )
+            lost = [c for c in target.columns if c not in updates.columns]
+            if lost:
+                raise ValueError(
+                    f"update batch is missing target column(s) {lost}: rows "
+                    "are replaced whole, so merging would drop them from "
+                    "every rewritten partition"
+                )
+            new_cols = [
+                c
+                for c in updates.columns
+                if c not in target.columns and c != delete_col
+            ]
+            if new_cols and not schema_evolution:
+                raise ValueError(
+                    f"update batch adds new column(s) {new_cols}; pass "
+                    "schema_evolution=True to evolve the table"
+                )
+
+            # touched-partition predicate: a disjunction of partition-value
+            # conjunctions, which Catalyst folds into partition pruning
+            # (PartitionFilters in the scan). eqNullSafe so that target rows
+            # sitting in a NULL partition (written before the non-NULL guard, or
+            # by another writer) evaluate to a definite false, not NULL — the
+            # stability check below negates this predicate, and ~NULL would
+            # silently drop those rows from the foreign set (r5 ADVICE fix; the
+            # old `isin` formulation had exactly that blind spot).
+            pred = None
+            for r in touched_rows:
+                conj = None
+                for c in partition_cols:
+                    term = F.col(c).eqNullSafe(F.lit(r[c]))
+                    conj = term if conj is None else (conj & term)
+                pred = conj if pred is None else (pred | conj)
+
+            if check_partition_stability:
+                # keys present in the table but owned by a NON-touched partition
+                # (including a NULL one) must not appear in the update batch.
+                foreign = target.select(*key_cols, *partition_cols).filter(~pred)
+                movers = (
+                    updates.select(*key_cols)
+                    .distinct()
+                    .join(foreign, list(key_cols), "inner")
+                    .limit(5)
+                    .collect()
+                )
+                if movers:
+                    raise ValueError(
+                        "partition-unstable keys (exist in a partition the batch "
+                        f"does not touch): {[tuple(m[k] for k in key_cols) for m in movers]}"
+                    )
+
+            # Align the read-back slice to the update batch's schema: partition
+            # values live in directory names, and Spark's partition-type
+            # inference only covers numeric/date/timestamp/string — a boolean
+            # (or other uninferred) partition column reads back as STRING and
+            # would fail the union below. The cast is a no-op where types
+            # already match. Evolved-in columns the target has never seen
+            # read back as typed NULLs (add-column semantics).
+            existing = target.filter(pred).select(
+                *[
+                    (
+                        F.col(f.name).cast(f.dataType)
+                        if f.name in target.columns
+                        else F.lit(None).cast(f.dataType)
+                    ).alias(f.name)
+                    for f in updates.schema.fields
+                ]
+            )
+
+            merged = existing.withColumn("_src", F.lit(0)).unionByName(
+                updates.withColumn("_src", F.lit(1))
+            )
+            # Window order must determinize the winner for ANY input, not just
+            # well-behaved ones: a replayed batch can carry the same key twice at
+            # the same version (even in different partitions). The plan below
+            # runs once, and the surviving partitions are observed by that same
+            # run; the row-hash tail still makes row_number a pure function of
+            # row values, so a replayed batch or a retried task picks the same
+            # winner rather than one left to shuffle fetch order.
+            # xxhash64 rejects map-typed columns at analysis time; for schemas
+            # containing one, hash the row's JSON rendering instead (slower, but
+            # merge isn't a hot path and the determinism guarantee must hold for
+            # every schema the warehouse accepts).
+            row_cols = [F.col(c) for c in updates.columns]
+            if any("map<" in f.dataType.simpleString() for f in updates.schema.fields):
+                tiebreak = F.xxhash64(F.to_json(F.struct(*row_cols)))
+            else:
+                tiebreak = F.xxhash64(*row_cols)
+            w = Window.partitionBy(*key_cols).orderBy(
+                F.col(version_col).desc(),
+                F.col("_src").desc(),
+                tiebreak,
+            )
+            latest = (
+                merged.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .drop("_rn", "_src")
+            )
+            if delete_col is not None:
+                # a winning tombstone removes its key from the rewritten
+                # slice; existing rows carry a NULL marker (aligned above)
+                # which coalesces to "keep". The marker never hits disk.
+                latest = latest.filter(
+                    ~F.coalesce(F.col(delete_col).cast("boolean"), F.lit(False))
+                ).drop(delete_col)
+            # a touched partition every row of which lost latest-wins to a
+            # row in another touched partition is cleared by the rewrite
+            _rewrite_touched(spark, latest, target_path, partition_cols,
+                             touched_rows)
+            return len(touched_rows)
+        finally:
+            _release_lock(lock_fs, lock, lock_mtime)
+
     finally:
-        _release_lock(lock_fs, lock, lock_mtime)
+        if owns_cache:
+            updates.unpersist()
+
+
+def _rewrite_touched(
+    spark, df: DataFrame, target_path: str, partition_cols: tuple[str, ...],
+    touched_rows,
+) -> None:
+    """Dynamic-overwrite the partitions `df` holds rows for, then delete
+    the directories of `touched_rows` partitions it holds none for:
+    dynamic overwrite never sees a partition that lost every row.
+
+    The surviving partitions are observed during the write itself (one
+    set entry per partition — bounded by the touched count, so the
+    observed result stays small at warehouse scale), so `df`'s plan runs
+    once.
+    Write-then-delete order keeps the table recoverable if the write
+    fails mid-way."""
+    obs = Observation()
+    overwrite_partitions(
+        df.observe(obs, F.collect_set(F.struct(*partition_cols)).alias("parts")),
+        target_path,
+        partition_cols,
+    )
+    remaining = {tuple(p) for p in obs.get["parts"]}
+    emptied = [
+        r
+        for r in touched_rows
+        if tuple(r[c] for c in partition_cols) not in remaining
+    ]
+    _delete_partition_dirs(spark, target_path, partition_cols, emptied)
 
 
 def _delete_partition_dirs(
@@ -468,7 +496,8 @@ def _delete_partition_dirs(
     """Remove the partition directories named by `rows` (which carry
     both raw values and the writer's `__str_<col>` renderings).
 
-    Spark escapes partition values in directory names (Hive path
+    Hadoop FS API, so the same code path works on HDFS/S3A, not just
+    local disk. Spark escapes partition values in directory names (Hive path
     escaping: '=', ':', '%', '#', '/', control chars → %XX), so the
     delete path must be built with the SAME escaping or it silently
     misses the directory (fs.delete of a nonexistent path returns
@@ -591,25 +620,11 @@ def delete_where(
         # the keep side must RETAIN NULL-evaluating rows (~NULL is NULL
         # and would drop them), hence the coalesce — pruning is already
         # done by `pred`, so the wrapper costs nothing here
-        keep = (
-            target.filter(pred)
-            .filter(~F.coalesce(cond.cast("boolean"), F.lit(False)))
-            .persist()
+        keep = target.filter(pred).filter(
+            ~F.coalesce(cond.cast("boolean"), F.lit(False))
         )
-        try:
-            remaining = {
-                tuple(r[c] for c in partition_cols)
-                for r in keep.select(*partition_cols).distinct().collect()
-            }
-            overwrite_partitions(keep, target_path, partition_cols)
-        finally:
-            keep.unpersist()
-        emptied = [
-            r
-            for r in touched_rows
-            if tuple(r[c] for c in partition_cols) not in remaining
-        ]
-        _delete_partition_dirs(spark, target_path, partition_cols, emptied)
+        _rewrite_touched(spark, keep, target_path, partition_cols,
+                         touched_rows)
         return len(touched_rows)
     finally:
         _release_lock(lock_fs, lock, lock_mtime)

@@ -411,6 +411,21 @@ def compact_table(
     return n_files
 
 
+def _sorted_for_write(
+    df: DataFrame, partition_cols: tuple[str, ...], sort_cols: tuple[str, ...]
+) -> DataFrame:
+    """`df` sorted within each task by `sort_cols`, led by the partition
+    columns when there are any. A partitioned write requires its input
+    ordered by the partition columns and, unless that ordering is
+    already met, plans its own `Sort(partition_cols)`, which replaces a
+    sort on `sort_cols` alone and leaves the part files unsorted. Led by
+    the partition columns, the one sort meets the write's ordering and
+    keeps `sort_cols` ascending inside every part file."""
+    if not sort_cols:
+        return df
+    return df.sortWithinPartitions(*partition_cols, *sort_cols)
+
+
 def write_partitioned(
     df: DataFrame,
     path: str,
@@ -423,12 +438,10 @@ def write_partitioned(
     Partition columns give partition pruning; sortWithinPartitions gives
     parquet min/max row-group skipping on the sort key — the Spark
     equivalent of the reference's rowkey clustering
-    (`{entity}_{timestamp}` keys, reference `insert.py:85`).
+    (`{entity}_{timestamp}` keys, reference `insert.py:85`). See
+    `_sorted_for_write` for why the partition columns lead the sort.
     """
-    out = df
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
-    writer = out.write.mode(mode)
+    writer = _sorted_for_write(df, partition_cols, sort_cols).write.mode(mode)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(path)
@@ -450,9 +463,8 @@ def overwrite_partitions(
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        out = df
-        if sort_cols:
-            out = out.sortWithinPartitions(*sort_cols)
-        out.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+        _sorted_for_write(df, partition_cols, sort_cols).write.mode(
+            "overwrite"
+        ).partitionBy(*partition_cols).parquet(path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

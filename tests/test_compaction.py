@@ -79,3 +79,30 @@ def test_dynamic_partition_overwrite_backfills_only_named_partitions(
         spark.conf.get("spark.sql.sources.partitionOverwriteMode").upper()
         == "STATIC"
     )
+
+
+def test_partitioned_writes_keep_sort_order_in_every_file(spark, tmp_path):
+    # a partitioned write plans its own sort on the partition columns;
+    # the sort key must survive it inside every part file, or parquet
+    # row-group skipping on it is lost
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from orionld_to_hive_spark.sources.warehouse import (
+        overwrite_partitions,
+        write_partitioned,
+    )
+
+    df = spark.range(0, 20_000, numPartitions=4).select(
+        (F.col("id") % 3).cast("string").alias("room"),
+        (F.lit(20_000) - F.col("id")).alias("ts"),
+    ).orderBy(F.col("ts").desc())
+    base = str(tmp_path / "wh")
+    write_partitioned(df, base, partition_cols=("room",), sort_cols=("ts",))
+    overwrite_partitions(df.filter("room = '1'"), base, ("room",), ("ts",))
+    files = glob.glob(base + "/room=*/*.parquet")
+    assert len(files) >= 3
+    for f in files:
+        ts = pq.read_table(f, columns=["ts"]).column("ts").to_pylist()
+        assert ts == sorted(ts), f
+    assert spark.read.parquet(base).count() == 20_000

@@ -7,6 +7,7 @@ import os
 from pyspark.sql import functions as F
 
 from orionld_to_hive_spark.sources.batch_csv import (
+    _FILE_RE,
     ingest_measurements,
     read_raw_measurements,
 )
@@ -148,3 +149,31 @@ def test_pack_sequences_respects_budget_overflow_bound(spark):
             assert p.pack_tokens >= PACK_BUDGET - 0 or p.n_docs >= 1
         # pack ids are dense from 0
         assert [p.pack_id for p in packs] == list(range(len(packs)))
+
+
+def test_identity_from_file_name_matches_full_uri(spark, tmp_path):
+    # identity is read from the bare file name; the full-URI expression
+    # it replaced must give the same (room, sensor) for every row, with
+    # the files nested a level down and named with an escaped space
+    # and '#' (which both expressions map to the same odd room)
+    d = tmp_path / "measurements"
+    (d / "ground").mkdir(parents=True)
+    (d / "upper floor").mkdir()
+    (d / "ground" / "Kitchen_Temperature.csv").write_text(KITCHEN_TEMP)
+    (d / "upper floor" / "My Room_Humidity.csv").write_text(ROOM1_HUM)
+    (d / "upper floor" / "Bath#1_Brightness.csv").write_text(BATH_BRIGHT)
+    raw = read_raw_measurements(spark, str(d / "*" / "*.csv"))
+    uri = F.input_file_name()
+    rows = raw.select(
+        "room",
+        "sensor",
+        uri.alias("uri"),
+        F.lower(F.regexp_extract(uri, _FILE_RE, 1)).alias("uri_room"),
+        F.lower(F.regexp_extract(uri, _FILE_RE, 2)).alias("uri_sensor"),
+    ).collect()
+    assert len({r.uri for r in rows}) == 3
+    assert all((r.room, r.sensor) == (r.uri_room, r.uri_sensor) for r in rows)
+    assert {(r.room, r.sensor) for r in rows} == {
+        ("kitchen", "temperature"), ("20room", "humidity"),
+        ("231", "brightness"),
+    }

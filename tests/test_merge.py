@@ -258,10 +258,8 @@ def test_merge_intra_batch_equal_version_duplicate_is_deterministic(
 ):
     # An at-least-once replay can carry the same key twice at the SAME
     # version in two partitions. The window tiebreak must be a pure
-    # function of row values: the remaining-partitions collect and the
-    # write are separate executions of the plan, and if each picked a
-    # different winner the emptied-partition delete could remove the
-    # directory the write populated, losing the key entirely.
+    # function of row values: the key must survive exactly once, and a
+    # replay of the batch must pick the same winner.
     path = str(tmp_path / "tbl")
     write_partitioned(_base(spark), path, partition_cols=("day",))
     dup = [(9, "a", 5, 1.0), (9, "b", 5, 2.0)]
@@ -811,3 +809,45 @@ def test_dml_on_evolved_table_keeps_evolved_column(spark, tmp_path):
     )
     got2 = {r.id: (r.value, r.tier) for r in read_merged(spark, path).collect()}
     assert got2[2] == (22.0, "gold")
+
+
+def test_merge_evaluates_the_update_batch_once(spark, tmp_path):
+    # the touched-partition collect and the latest-wins write share one
+    # evaluation of the caller's plan: each batch row passes the
+    # counting map exactly once
+    path = str(tmp_path / "tbl_once")
+    write_partitioned(_base(spark), path, partition_cols=("day",))
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    def count(row):
+        seen.add(1)
+        return row
+
+    rows = [(1, "a", 2, 11.0), (3, "b", 2, 31.0), (5, "d", 1, 50.0)]
+    updates = spark.createDataFrame(
+        sc.parallelize(rows, 2).map(count),
+        "id LONG, day STRING, version LONG, value DOUBLE",
+    )
+    assert merge_upsert(path, updates, ("id",), "version", ("day",)) == 3
+    assert seen.value == len(rows)
+    # the merge released the cache it made
+    assert not updates.storageLevel.useMemory
+    got = {r.id: r.value for r in spark.read.parquet(path).collect()}
+    assert got == {1: 11.0, 2: 20.0, 3: 31.0, 4: 40.0, 5: 50.0}
+
+
+def test_merge_leaves_a_caller_cache_in_place(spark, tmp_path):
+    path = str(tmp_path / "tbl_cached")
+    write_partitioned(_base(spark), path, partition_cols=("day",))
+    updates = spark.createDataFrame(
+        [(2, "a", 2, 21.0)], "id LONG, day STRING, version LONG, value DOUBLE"
+    ).cache()
+    try:
+        level = updates.storageLevel
+        merge_upsert(path, updates, ("id",), "version", ("day",))
+        assert updates.storageLevel == level and level.useMemory
+    finally:
+        updates.unpersist()
+    got = {r.id: r.value for r in spark.read.parquet(path).collect()}
+    assert got == {1: 10.0, 2: 21.0, 3: 30.0, 4: 40.0}

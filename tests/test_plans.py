@@ -616,8 +616,10 @@ def test_semdedup_pair_join_is_keyed_not_cartesian(spark, sf_smoke):
     assert "CartesianProduct" not in plan, plan
     # the cid self-join is present as a real join, and every
     # BroadcastNestedLoopJoin (the crossJoin physical form) carries
-    # the K-bounded centroid side, which arrives via LocalTableScan
+    # the K-bounded centroid side, which arrives via LocalTableScan —
+    # never a Python-RDD scan, which a second Python daemon would serve
     assert "Join" in plan
+    assert "ExistingRDD" not in plan, plan
 
 
 def test_triage_queries_are_single_scan_no_shuffle_before_sort(spark, sf_smoke):
@@ -651,6 +653,7 @@ def test_ivf_multiprobe_centroid_sides_are_broadcast(spark, sf_smoke):
     plan = formatted(df)
     assert "CartesianProduct" not in plan, plan
     assert has_broadcast_join(df), plan
+    assert "ExistingRDD" not in plan, plan  # centroids: LocalTableScan
 
 
 def test_robots_gate_plan_is_jvm_only_and_shuffle_free(spark, sf_smoke):
@@ -694,3 +697,71 @@ def test_walker_stages_are_core_spread(spark, sf_smoke):
         plan = executed_plan(q(spark, sf_smoke))
         assert "MapInPandas" in plan, plan[:500]
         assert "roundrobin" in plan.lower(), plan[:500]
+
+
+def _job_counts(spark, fn) -> tuple[int, int]:
+    """(jobs, stages) Spark ran for `fn()`, counted by job group; stages
+    are those the jobs list, skipped ones included."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plans-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed async
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    return len(jobs), sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+
+
+def test_write_side_job_budgets(spark, tmp_path):
+    # deterministic counters of the write-side cycle: the TSV ingest is
+    # one job; a merge evaluates its update batch once and learns the
+    # surviving partitions from the write itself (no persist +
+    # distinct-collect pass), and delete_where shares that rewrite
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    from orionld_to_hive_spark.sources.batch_csv import ingest_measurements
+    from orionld_to_hive_spark.sources.merge import delete_where, merge_upsert
+    from orionld_to_hive_spark.sources.warehouse import write_partitioned
+
+    d = tmp_path / "tsv"
+    d.mkdir()
+    for room in ("Kitchen", "Room1"):
+        for sensor in ("Temperature", "Humidity"):
+            (d / f"{room}_{sensor}.csv").write_text(
+                "".join(f"{1489017527 + 60 * i}\t{i % 50}.5\n" for i in range(200))
+            )
+    out = str(tmp_path / "ingested")
+    assert _job_counts(
+        spark, lambda: ingest_measurements(spark, str(d / "*.csv"), out)
+    )[0] == 1
+
+    schema = ("room STRING, entityid STRING, temperature DOUBLE, "
+              "humidity INT, brightness DOUBLE, ts TIMESTAMP")
+    t0 = datetime.datetime(2024, 1, 1)
+    rows = [(f"r{i % 6}", f"e{i}", float(i), None, None,
+             t0 + datetime.timedelta(minutes=i)) for i in range(600)]
+    path = str(tmp_path / "readings")
+    write_partitioned(spark.createDataFrame(rows, schema), path,
+                      partition_cols=("room",), sort_cols=("ts",))
+    fixes = spark.createDataFrame(
+        [(r[0], r[1], r[2] + 100.0, None, None, r[5]) for r in rows[::7]],
+        schema,
+    )
+    jobs, stages = _job_counts(
+        spark,
+        lambda: merge_upsert(path, fixes, ("entityid",), "ts", ("room",)),
+    )
+    assert jobs <= 6 and stages <= 8, (jobs, stages)
+    jobs, _ = _job_counts(
+        spark,
+        lambda: delete_where(spark, path, F.col("temperature") > 650.0,
+                             ("room",)),
+    )
+    assert jobs <= 4, jobs
