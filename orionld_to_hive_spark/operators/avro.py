@@ -40,13 +40,12 @@ from __future__ import annotations
 
 import json
 import zlib
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 _MAGIC = b"Obj\x01"
 _SYNC = bytes(range(16))  # fixture sync marker (any 16 bytes are legal)
@@ -255,34 +254,13 @@ def avro_container_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk. The varint metadata map, sync-marker chain, per-block
     record decode, and deflate codec (even ids) are all on the oracle
     path: body_text must equal documents.text bit-for-bit."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, cds, sns, nbs, nrs, mes, txts = [], [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                m = parse_avro_meta(encode_avro(d, text or ""))
-                ids.append(d)
-                cds.append(m.codec)
-                sns.append(m.schema_name)
-                nbs.append(m.n_blocks)
-                nrs.append(m.n_records)
-                mes.append(m.meta_entries)
-                txts.append(m.body_text)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "codec": cds,
-                    "schema_name": sns,
-                    "n_blocks": pd.Series(nbs, dtype="int32"),
-                    "n_records": pd.Series(nrs, dtype="int32"),
-                    "meta_entries": pd.Series(mes, dtype="int32"),
-                    "body_text": txts,
-                }
-            )
+    def walk(d: int, text: str):
+        m = parse_avro_meta(encode_avro(d, text))
+        yield (d, m.codec, m.schema_name, m.n_blocks, m.n_records,
+               m.meta_entries, m.body_text)
 
-    return docs.mapInPandas(run, AVRO_SCHEMA)
+    return walker_query(spark, sf_dir, walk, AVRO_SCHEMA)
 
 
 # closed forms of encode_avro: n = 1 + id%5 records, 2 per block →

@@ -39,13 +39,12 @@ field a closed form of the document row.
 from __future__ import annotations
 
 import struct
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1, 9: 4, 10: 8}
 
@@ -313,41 +312,12 @@ def multimodal_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIFF byte orders via doc_id parity, inline AND out-of-line
     values, a private Exif sub-IFD) → segment scan + IFD walk. Every
     reported field is a closed form of the document row."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        m = parse_jpeg_exif(encode_jpeg_with_exif(d, text.encode("utf-8")))
+        yield (d, m.byte_order, m.n_ifd0, m.orientation, m.make, m.model,
+               m.datetime, m.pixel_x, m.pixel_y)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols: dict = {f.name: [] for f in EXIF_SCHEMA.fields}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                data = (text or "").encode("utf-8")
-                m = parse_jpeg_exif(encode_jpeg_with_exif(d, data))
-                cols["asset_id"].append(d)
-                cols["byte_order"].append(m.byte_order)
-                cols["n_ifd0"].append(m.n_ifd0)
-                cols["orientation"].append(m.orientation)
-                cols["make"].append(m.make)
-                cols["model"].append(m.model)
-                cols["datetime"].append(m.datetime)
-                cols["pixel_x"].append(m.pixel_x)
-                cols["pixel_y"].append(m.pixel_y)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(cols["asset_id"], dtype="int64"),
-                    "byte_order": cols["byte_order"],
-                    "n_ifd0": pd.Series(cols["n_ifd0"], dtype="int32"),
-                    "orientation": pd.Series(
-                        cols["orientation"], dtype="int32"
-                    ),
-                    "make": cols["make"],
-                    "model": cols["model"],
-                    "datetime": cols["datetime"],
-                    "pixel_x": pd.Series(cols["pixel_x"], dtype="int64"),
-                    "pixel_y": pd.Series(cols["pixel_y"], dtype="int64"),
-                }
-            )
-
-    return docs.mapInPandas(run, EXIF_SCHEMA)
+    return walker_query(spark, sf_dir, walk, EXIF_SCHEMA)
 
 
 MULTIMODAL_EXIF_SQL = """

@@ -31,13 +31,12 @@ CASE arithmetic in DuckDB.
 from __future__ import annotations
 
 import struct
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 
 class FlacMeta(NamedTuple):
@@ -262,55 +261,24 @@ def multimodal_flac_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents → synthetic FLAC prefixes (fields derived from the
     row, the text bytes appended as the opaque frame region the
     walker must skip past metadata and never read) → triage."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols: dict = {f.name: [] for f in FLAC_META_SCHEMA.fields}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                d = int(doc_id)
-                m = parse_flac_meta(
-                    encode_flac_meta(
-                        sample_rate=_SYNTH_RATES[d % 3],
-                        channels=1 + d % 2,
-                        bits=16,
-                        total_samples=len(data) * 100,
-                        padding=1 + d % 7,
-                        vorbis=(d % 3 == 0),
-                        frames=data,
-                    )
-                )
-                cols["asset_id"].append(d)
-                cols["sample_rate"].append(m.sample_rate)
-                cols["channels"].append(m.channels)
-                cols["bits_per_sample"].append(m.bits_per_sample)
-                cols["total_samples"].append(m.total_samples)
-                cols["duration_ms"].append(m.duration_ms)
-                cols["n_meta_blocks"].append(m.n_meta_blocks)
-                cols["has_vorbis_comment"].append(m.has_vorbis_comment)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(cols["asset_id"], dtype="int64"),
-                    "sample_rate": pd.Series(cols["sample_rate"], dtype="int32"),
-                    "channels": pd.Series(cols["channels"], dtype="int32"),
-                    "bits_per_sample": pd.Series(
-                        cols["bits_per_sample"], dtype="int32"
-                    ),
-                    "total_samples": pd.Series(
-                        cols["total_samples"], dtype="int64"
-                    ),
-                    "duration_ms": pd.Series(cols["duration_ms"], dtype="int64"),
-                    "n_meta_blocks": pd.Series(
-                        cols["n_meta_blocks"], dtype="int32"
-                    ),
-                    "has_vorbis_comment": pd.Series(
-                        cols["has_vorbis_comment"], dtype="bool"
-                    ),
-                }
+    def walk(d: int, text: str):
+        data = text.encode("utf-8")
+        m = parse_flac_meta(
+            encode_flac_meta(
+                sample_rate=_SYNTH_RATES[d % 3],
+                channels=1 + d % 2,
+                bits=16,
+                total_samples=len(data) * 100,
+                padding=1 + d % 7,
+                vorbis=(d % 3 == 0),
+                frames=data,
             )
+        )
+        yield (d, m.sample_rate, m.channels, m.bits_per_sample,
+               m.total_samples, m.duration_ms, m.n_meta_blocks,
+               m.has_vorbis_comment)
 
-    return docs.mapInPandas(run, FLAC_META_SCHEMA)
+    return walker_query(spark, sf_dir, walk, FLAC_META_SCHEMA)
 
 
 MULTIMODAL_FLAC_SQL = """
@@ -377,46 +345,26 @@ def multimodal_flac_vorbis(spark: SparkSession, sf_dir: str) -> DataFrame:
     _synth_vorbis_fields) → tag extraction. The little-endian length
     framing, case-insensitive field names, '='-in-value tolerance, and
     the absent-tag NULL path are all on the oracle path."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, vnd, ncs, art, ttl, lng, gnr = [], [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                data = (text or "").encode("utf-8")
-                blob = encode_flac_meta(
-                    sample_rate=_SYNTH_RATES[d % 3],
-                    channels=1 + d % 2,
-                    bits=16,
-                    total_samples=len(data) * 100,
-                    padding=1 + d % 7,
-                    vorbis_body=encode_vorbis_block(
-                        _VORBIS_VENDOR, _synth_vorbis_fields(d, text or "")
-                    ),
-                    frames=data,
-                )
-                v = parse_flac_vorbis(blob)
-                ids.append(d)
-                vnd.append(v.vendor)
-                ncs.append(v.n_comments)
-                art.append(first_field(v, "artist"))
-                ttl.append(first_field(v, "title"))
-                lng.append(first_field(v, "language"))
-                gnr.append(first_field(v, "genre"))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "vendor": vnd,
-                    "n_comments": pd.Series(ncs, dtype="int32"),
-                    "artist": art,
-                    "title": ttl,
-                    "language": lng,
-                    "genre": gnr,
-                }
+    def walk(d: int, text: str):
+        data = text.encode("utf-8")
+        v = parse_flac_vorbis(
+            encode_flac_meta(
+                sample_rate=_SYNTH_RATES[d % 3],
+                channels=1 + d % 2,
+                bits=16,
+                total_samples=len(data) * 100,
+                padding=1 + d % 7,
+                vorbis_body=encode_vorbis_block(
+                    _VORBIS_VENDOR, _synth_vorbis_fields(d, text)
+                ),
+                frames=data,
             )
+        )
+        yield (d, v.vendor, v.n_comments, first_field(v, "artist"),
+               first_field(v, "title"), first_field(v, "language"),
+               first_field(v, "genre"))
 
-    return docs.mapInPandas(run, FLAC_VORBIS_SCHEMA)
+    return walker_query(spark, sf_dir, walk, FLAC_VORBIS_SCHEMA)
 
 
 FLAC_VORBIS_SQL = f"""

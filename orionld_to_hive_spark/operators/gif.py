@@ -28,12 +28,12 @@ backs the synth fixture and roundtrip property tests; the decoder is
 additionally pinned by hand-built code streams (units) that are
 independent of the compressor, mirroring the JPEG test strategy.
 
-Scale shape: synth and decode are both partition-local Arrow-batched
-`mapInPandas` stages over `warehouse.load_docs_spread`, the same
-layout-adaptive, size-capped core spread every walker uses (the codec
-is CPU-bound Python; on a real cluster the input already has split
-parallelism and no exchange is added). The frame fan-out happens
-inside the UDF batch — no shuffle, no UDTF.
+Scale shape: synth and decode run per document inside the one
+`walker.walker_query` boundary, over the same layout-adaptive,
+size-capped core spread every walker uses (the codec is CPU-bound
+Python; on a real cluster the input already has split parallelism and
+no exchange is added). The frame fan-out is a walk yielding one row
+per frame — no shuffle, no UDTF.
 
 LZW cost: the codec is pure Python, so its inner loops are written
 for the interpreter. The decoder appends each table entry to one
@@ -61,16 +61,14 @@ stats are exact integer/byte arithmetic DuckDB can replay from
 """
 from __future__ import annotations
 
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from orionld_to_hive_spark.operators.multimodal import PNG_DARK
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 _MAX_CODE_WIDTH = 12
 _TABLE_LIMIT = 1 << _MAX_CODE_WIDTH  # 4096
@@ -553,13 +551,6 @@ def encode_gif_gray_anim(data: np.ndarray, interlace: bool = False) -> bytes:
 # --------------------------------------------------------------------------
 # Spark queries
 
-_ASSET_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
 GIF_FRAME_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.LongType(), False),
@@ -584,109 +575,49 @@ GIF_SUMMARY_SCHEMA = T.StructType(
 )
 
 
-def _gif_synth_batches(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-    """Batch generator: (doc_id, text) pdfs → GIF asset pdfs. Even
-    doc_ids encode INTERLACED so the driver path exercises the
-    four-pass reorder; the decoded frames (and therefore the oracle)
-    are identical either way. Module-level so the fused query paths
-    compose it in-process (guide §4.1 — see the JPEG twin
-    _fused_pixel_stats for the rationale; the payload bytes never
-    cross the Python boundary in the fused shape)."""
-    for pdf in it:
-        payloads = [
-            encode_gif_gray_anim(
-                np.frombuffer((t or "").encode("utf-8"), dtype=np.uint8),
-                interlace=(int(d) % 2 == 0),
-            )
-            for d, t in zip(pdf["doc_id"], pdf["text"])
-        ]
-        yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
-
-
-def gif_assets_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents → animated-GIF assets, as a standalone frame (test /
-    composition surface; the registry queries use the fused
-    single-crossing paths)."""
-    return load_docs_spread(spark, sf_dir).mapInPandas(
-        _gif_synth_batches, _ASSET_SCHEMA
+def _synth_gif(d: int, text: str) -> bytes:
+    """Document → animated GIF. Even doc_ids encode INTERLACED so the
+    registry queries exercise the four-pass reorder; the decoded frames
+    (and therefore the oracle) are identical either way."""
+    return encode_gif_gray_anim(
+        np.frombuffer(text.encode("utf-8"), dtype=np.uint8),
+        interlace=(d % 2 == 0),
     )
 
 
-def _gif_frame_batches(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-    for pdf in it:
-        ids, idxs, ws, hs, means, darks, delays = [], [], [], [], [], [], []
-        for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-            img = decode_gif(bytes(payload))
-            for k, fr in enumerate(img.frames):
-                px = fr[:, :, 0]  # identity gray palette: R == index
-                ids.append(asset_id)
-                idxs.append(k)
-                ws.append(fr.shape[1])
-                hs.append(fr.shape[0])
-                means.append(
-                    np.floor(int(px.sum(dtype=np.int64)) / px.size * 1e6 + 0.5)
-                    / 1e6
-                )
-                darks.append(int((px < PNG_DARK).sum()))
-                delays.append(img.delays[k])
-        yield pd.DataFrame(
-            {
-                "asset_id": pd.Series(ids, dtype="int64"),
-                "frame_index": pd.Series(idxs, dtype="int32"),
-                "width": pd.Series(ws, dtype="int32"),
-                "height": pd.Series(hs, dtype="int32"),
-                "mean_pixel": pd.Series(means, dtype="float64"),
-                "n_dark": pd.Series(darks, dtype="int32"),
-                "delay_cs": pd.Series(delays, dtype="int32"),
-            }
-        )
-
-def gif_frame_stats(df: DataFrame) -> DataFrame:
+def _frame_rows(d: int, payload: bytes):
     """asset → one row per composited frame (the real version of the
     byte-window frame sampler): grayscale mean (floor-rounded to 1e-6,
     matching the SQL twin bit-for-bit), dark-pixel count, GCE delay."""
-    return df.mapInPandas(_gif_frame_batches, GIF_FRAME_SCHEMA)
+    img = decode_gif(payload)
+    for k, fr in enumerate(img.frames):
+        px = fr[:, :, 0]  # identity gray palette: R == index
+        yield (
+            d, k, fr.shape[1], fr.shape[0],
+            np.floor(int(px.sum(dtype=np.int64)) / px.size * 1e6 + 0.5) / 1e6,
+            int((px < PNG_DARK).sum()),
+            img.delays[k],
+        )
+
+
+def _frames_walk(d: int, text: str):
+    return _frame_rows(d, _synth_gif(d, text))
 
 
 def multimodal_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused single-crossing path (r14 second pass): synth + decode
-    # composed in-process — see _gif_synth_batches
-    return load_docs_spread(spark, sf_dir).mapInPandas(
-        lambda it: _gif_frame_batches(_gif_synth_batches(it)),
-        GIF_FRAME_SCHEMA,
+    return walker_query(spark, sf_dir, _frames_walk, GIF_FRAME_SCHEMA)
+
+
+def _summary_walk(d: int, text: str):
+    img = decode_gif(_synth_gif(d, text))
+    yield (
+        d, len(img.frames), img.width, img.height, sum(img.delays),
+        -1 if img.loop_count is None else img.loop_count,
     )
-
-
-def _gif_summary_batches(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-    for pdf in it:
-        n = len(pdf)
-        out = {
-            "asset_id": pdf["asset_id"].to_numpy(),
-            "n_frames": np.zeros(n, dtype="int32"),
-            "screen_w": np.zeros(n, dtype="int32"),
-            "screen_h": np.zeros(n, dtype="int32"),
-            "total_delay_cs": np.zeros(n, dtype="int32"),
-            "loop_count": np.zeros(n, dtype="int32"),
-        }
-        for j, payload in enumerate(pdf["payload"]):
-            img = decode_gif(bytes(payload))
-            out["n_frames"][j] = len(img.frames)
-            out["screen_w"][j] = img.width
-            out["screen_h"][j] = img.height
-            out["total_delay_cs"][j] = sum(img.delays)
-            out["loop_count"][j] = -1 if img.loop_count is None else img.loop_count
-        yield pd.DataFrame(out)
-
-def gif_anim_summary(df: DataFrame) -> DataFrame:
-    return df.mapInPandas(_gif_summary_batches, GIF_SUMMARY_SCHEMA)
 
 
 def multimodal_gif_anim_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused single-crossing path (r14 second pass)
-    return load_docs_spread(spark, sf_dir).mapInPandas(
-        lambda it: _gif_summary_batches(_gif_synth_batches(it)),
-        GIF_SUMMARY_SCHEMA,
-    )
+    return walker_query(spark, sf_dir, _summary_walk, GIF_SUMMARY_SCHEMA)
 
 
 # Closed-form oracles: frame k of doc d is text bytes [256k, 256k+256)
@@ -754,25 +685,13 @@ def multimodal_gif_selective_frames(spark: SparkSession, sf_dir: str) -> DataFra
     frame decode runs only on survivors. On this corpus the predicate
     keeps docs longer than one 256-byte frame (~55% of assets holding
     ~75% of bytes at sf0.1)."""
-    # fused single-crossing path (r14 second pass): synth → metadata
-    # triage → predicate → frame decode of survivors, composed
-    # in-process; the JVM `n_frames >= 2` filter becomes the same
-    # int32 comparison in pandas (row-identical; see the JPEG twin
-    # _jpeg_selective for the rationale)
 
-    def meta_filter(it):
-        for pdf in it:
-            nf = np.fromiter(
-                (parse_gif_meta(bytes(p))[2] for p in pdf["payload"]),
-                dtype=np.int32,
-                count=len(pdf),
-            )
-            yield pdf[nf >= 2]
+    def walk(d: int, text: str):
+        payload = _synth_gif(d, text)
+        if parse_gif_meta(payload)[2] >= 2:
+            yield from _frame_rows(d, payload)
 
-    return load_docs_spread(spark, sf_dir).mapInPandas(
-        lambda it: _gif_frame_batches(meta_filter(_gif_synth_batches(it))),
-        GIF_FRAME_SCHEMA,
-    )
+    return walker_query(spark, sf_dir, walk, GIF_FRAME_SCHEMA)
 
 
 MULTIMODAL_GIF_SELECTIVE_SQL = MULTIMODAL_GIF_FRAMES_SQL.replace(

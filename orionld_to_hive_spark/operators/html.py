@@ -41,13 +41,12 @@ string concatenation.
 from __future__ import annotations
 
 import re
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 # Block-level elements (WHATWG flow content that breaks lines) plus
 # the document-structure elements; everything else is inline.
@@ -225,25 +224,11 @@ def html_text_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     quoted-'>' attribute, charref decode, comment/script/style
     removal, and block/inline separation are all on the oracle path
     for every document."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        page = extract_text(encode_html(d, text))
+        yield d, len(page), page
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ncs, txts = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                page = extract_text(encode_html(int(doc_id), text or ""))
-                ids.append(int(doc_id))
-                ncs.append(len(page))
-                txts.append(page)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "n_chars": pd.Series(ncs, dtype="int32"),
-                    "page_text": txts,
-                }
-            )
-
-    return docs.mapInPandas(run, HTML_EXTRACT_SCHEMA)
+    return walker_query(spark, sf_dir, walk, HTML_EXTRACT_SCHEMA)
 
 
 def warc_html_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,52 +247,36 @@ def warc_html_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_warc,
     )
 
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        body = encode_html(d, text).encode("utf-8")
+        http = (
+            b"HTTP/1.1 200 OK\r\n"
+            b"Content-Type: text/html; charset=utf-8\r\n"
+            + f"Content-Length: {len(body)}".encode()
+            + _CRLF + _CRLF + body
+        )
+        resp = encode_warc_record(
+            "response",
+            f"<urn:uuid:doc-{d}>",
+            http,
+            target_uri=f"http://example.com/doc/{d}",
+        )
+        meta = encode_warc_record(
+            "metadata", f"<urn:uuid:meta-{d}>", _META_PAYLOAD
+        )
+        blob = (
+            _gzip_member(resp) + _gzip_member(meta)
+            if d % 2 == 0
+            else resp + meta
+        )
+        rec = next(r for r in parse_warc(blob) if r.rec_type == "response")
+        h = parse_http_response(rec.payload)
+        page_html, _, fired = decode_http_body(h.body, h.content_type)
+        assert fired == "declared"
+        page = extract_text(page_html)
+        yield d, len(page), page
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ncs, txts = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                body = encode_html(d, text or "").encode("utf-8")
-                http = (
-                    b"HTTP/1.1 200 OK\r\n"
-                    b"Content-Type: text/html; charset=utf-8\r\n"
-                    + f"Content-Length: {len(body)}".encode()
-                    + _CRLF + _CRLF + body
-                )
-                resp = encode_warc_record(
-                    "response",
-                    f"<urn:uuid:doc-{d}>",
-                    http,
-                    target_uri=f"http://example.com/doc/{d}",
-                )
-                meta = encode_warc_record(
-                    "metadata", f"<urn:uuid:meta-{d}>", _META_PAYLOAD
-                )
-                blob = (
-                    _gzip_member(resp) + _gzip_member(meta)
-                    if d % 2 == 0
-                    else resp + meta
-                )
-                recs = parse_warc(blob)
-                rec = next(r for r in recs if r.rec_type == "response")
-                h = parse_http_response(rec.payload)
-                page_html, _, fired = decode_http_body(h.body, h.content_type)
-                assert fired == "declared"
-                page = extract_text(page_html)
-                ids.append(d)
-                ncs.append(len(page))
-                txts.append(page)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "n_chars": pd.Series(ncs, dtype="int32"),
-                    "page_text": txts,
-                }
-            )
-
-    return docs.mapInPandas(run, HTML_EXTRACT_SCHEMA)
+    return walker_query(spark, sf_dir, walk, HTML_EXTRACT_SCHEMA)
 
 
 # expected page text: 't{id}\nDoc {id}!\n' + normalized(text) + '\n'
@@ -479,29 +448,11 @@ def html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     sidebar/footer blocks must be dropped and the two content
     paragraphs kept verbatim — both the segmentation and the density
     arithmetic are on the oracle path for every row."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        content, n_blocks, n_kept = main_content(encode_html_page(d, text))
+        yield d, n_blocks, n_kept, content
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, nbs, ncs, txts = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                content, n_blocks, n_kept = main_content(
-                    encode_html_page(int(doc_id), text or "")
-                )
-                ids.append(int(doc_id))
-                nbs.append(n_blocks)
-                ncs.append(n_kept)
-                txts.append(content)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "n_blocks": pd.Series(nbs, dtype="int32"),
-                    "n_content_blocks": pd.Series(ncs, dtype="int32"),
-                    "content_text": txts,
-                }
-            )
-
-    return docs.mapInPandas(run, MAIN_CONTENT_SCHEMA)
+    return walker_query(spark, sf_dir, walk, MAIN_CONTENT_SCHEMA)
 
 
 # The fixture always yields 5 non-empty blocks (nav, h1, p, p, the

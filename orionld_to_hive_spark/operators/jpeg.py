@@ -32,11 +32,11 @@ general paths — AC coefficients, subsampling, color transform,
 restarts, 16-bit DQT — are pinned by hand-built streams in
 tests/test_jpeg_baseline.py.
 
-Scale shape: decode is Arrow-batched mapInPandas, partition-local,
-zero shuffle before the final per-asset stats (one row per asset, no
-pixel data leaves the executor). Per-asset Python cost is linear in
-payload bytes; at 100 TB the decode parallelizes per file split like
-every other mapInPandas stage.
+Scale shape: synth + decode + stats run per document inside the one
+`walker.walker_query` boundary, partition-local, zero shuffle (one row
+per asset, no pixel data leaves the executor). Per-asset Python cost
+is linear in payload bytes; at 100 TB the decode parallelizes per file
+split like every other walker query.
 
 Reference: the reference engine (dannydenovi/OrionLD-to-Hive) has no
 multimodal surface at all (hive.py:1-138 is tabular); this is
@@ -47,20 +47,19 @@ from __future__ import annotations
 
 import functools
 import struct
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from orionld_to_hive_spark.operators.multimodal import (
     PNG_DARK,
     PNG_STATS_SCHEMA,
     _pad_raster,
+    pixel_stats,
+    pixel_stats_query,
 )
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 # Zig-zag index: ZIGZAG[k] = raster position (row*8+col) of the k-th
 # coefficient in transmission order (spec Figure 5).
@@ -250,7 +249,7 @@ def decode_jpeg(payload: bytes) -> JpegImage:
     must surface as ValueError (or NotImplementedError for honest
     capability refusals) — never a low-level IndexError/KeyError/
     struct.error, and never StopIteration, which would silently
-    terminate a surrounding generator (the mapInPandas batch loop).
+    terminate a surrounding generator (a walker_query walk).
     Found by fuzzing mutated streams; the impl's own specific
     ValueErrors pass through untouched."""
     try:
@@ -495,7 +494,11 @@ def _dc_fast_coefs(payload, data_start, per_mcu, n_mcus):
     n_blocks = n_mcus * blocks_per_mcu
     data, marker_pos = _entropy_segment(payload, data_start)
     nbits = len(data) * 8
-    if nbits == 0:
+    # a DC-only block codes at most 16 (DC code) + 15 (magnitude) + 16
+    # (EOB) bits; a longer segment cannot conform, and the per-bit
+    # tables below would cost ~70 bytes per entropy BIT of untrusted
+    # input before the chain walk could say so
+    if nbits == 0 or nbits > 47 * n_blocks + 8:
         return None
     padded = np.concatenate(
         [data, np.full(8, 0xFF, dtype=np.uint8)]
@@ -626,6 +629,13 @@ def _decode_scan(payload, data_start, body, frame, qt, huff,
             per_mcu.append((cid, huff[(0, td)], huff[(1, ta)], q))
     blocks_per_mcu = len(per_mcu)
     n_blocks = n_mcus * blocks_per_mcu
+    # every block codes its DC with at least one bit, so a frame header
+    # claiming more blocks than the payload has bits is corrupt — refuse
+    # it before sizing any per-block array from the header alone
+    if n_blocks > 8 * len(payload):
+        raise ValueError(
+            f"scan declares {n_blocks} blocks in a {len(payload)}-byte stream"
+        )
     # coefficients in TRANSMISSION (zigzag) order, dequantized at
     # write time; the IDCT runs ONCE, batched over every block of the
     # scan — per-block numpy work (alloc + two 8×8 matmuls) dominates
@@ -1529,57 +1539,11 @@ def encode_jpeg_cmyk_flat(
 
 # --------------------------------------------------------------------------
 # Registry query: synth flat-block JPEGs from document text, decode
-# with the GENERAL decoder, aggregate per-asset pixel stats. Exact
-# integer sums in float64 → the hex-dump oracle matches bit-for-bit,
-# but only if every stage (huffman, dequant, IDCT, level shift,
-# raster placement) is right.
-_ASSET_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-    ]
-)
-
-
-def _synth_batches(encoder):
-    """Batch generator: (doc_id, text) pdfs → asset pdfs through
-    `encoder`. Module-level so the fused query paths can compose it
-    in-process with the decode generators (guide §4.1: one boundary
-    crossing instead of three — see _fused_pixel_stats)."""
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                encoder(
-                    np.frombuffer((t or "").encode("utf-8"), dtype=np.uint8)
-                )
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                }
-            )
-
-    return synth
-
-
-def _assets_from_documents(
-    spark: SparkSession, sf_dir: str, encoder
-) -> DataFrame:
-    """Documents → flat-block JPEG assets through `encoder`, as a
-    standalone asset frame (test/composition surface; the registry
-    stats queries use the fused single-crossing path below)."""
-    return load_docs_spread(spark, sf_dir).mapInPandas(
-        _synth_batches(encoder), _ASSET_SCHEMA
-    )
-
-
-def jpeg_assets_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _assets_from_documents(spark, sf_dir, encode_jpeg_gray_flat)
+# with the GENERAL decoder, aggregate per-asset pixel stats
+# (multimodal.pixel_stats_query, shared with PNG). Exact integer sums
+# in float64 → the hex-dump oracle matches bit-for-bit, but only if
+# every stage (huffman, dequant, IDCT, level shift, raster placement)
+# is right.
 
 
 def parse_jpeg_dims(payload: bytes) -> tuple[int, int, int]:
@@ -1617,69 +1581,8 @@ def parse_jpeg_dims(payload: bytes) -> tuple[int, int, int]:
     raise ValueError("no frame in JPEG stream")
 
 
-def _stats_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Batch generator: asset pdfs → pixel-stat pdfs (module-level for
-    in-process composition — see _fused_pixel_stats)."""
-    for pdf in it:
-        n = len(pdf)
-        out = {
-            "asset_id": pdf["asset_id"].to_numpy(),
-            "width": np.zeros(n, dtype="int32"),
-            "height": np.zeros(n, dtype="int32"),
-            "n_pixels": np.zeros(n, dtype="int32"),
-            "mean_pixel": np.zeros(n),
-            "max_pixel": np.zeros(n, dtype="int32"),
-            "n_dark": np.zeros(n, dtype="int32"),
-        }
-        for j, payload in enumerate(pdf["payload"]):
-            img = decode_jpeg(bytes(payload))
-            px = img.samples
-            out["width"][j] = img.width
-            out["height"][j] = img.height
-            out["n_pixels"][j] = px.size
-            out["mean_pixel"][j] = (
-                np.floor(int(px.sum(dtype=np.int64)) / px.size * 1e6 + 0.5)
-                / 1e6
-            )
-            out["max_pixel"][j] = int(px.max())
-            out["n_dark"][j] = int((px < PNG_DARK).sum())
-        yield pd.DataFrame(out)
-
-
-def jpeg_pixel_stats(df: DataFrame) -> DataFrame:
-    return df.mapInPandas(_stats_batches, PNG_STATS_SCHEMA)
-
-
-def _fused_pixel_stats(spark: SparkSession, sf_dir: str, encoder) -> DataFrame:
-    """Encode + decode inside ONE Python task (r14 second pass, guide
-    §4.1 "control how many times data crosses the boundary"): the
-    staged shape `jpeg_pixel_stats(_assets_from_documents(...))`
-    chained two mapInPandas nodes, so every synthesized payload
-    crossed Python→JVM→Python (Arrow-serialized twice) purely to
-    change batch functions. The fused node composes the SAME two batch
-    generators in-process — `_stats_batches(_synth_batches(enc)(it))`,
-    identical code objects, identical per-doc arithmetic, identical
-    batch boundaries — and the payload bytes never cross the boundary
-    at all (only doc text in, stat rows out). In production the asset
-    bytes arrive from parquet and cross once either way; here the
-    fixture round-trip was pure overhead. Staged ≡ fused pinned in
-    tests/test_opt_r14.py; the oracle is unchanged."""
-    synth = _synth_batches(encoder)
-    return load_docs_spread(spark, sf_dir).mapInPandas(
-        lambda it: _stats_batches(synth(it)), PNG_STATS_SCHEMA
-    )
-
-
 def multimodal_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fused_pixel_stats(spark, sf_dir, encode_jpeg_gray_flat)
-
-
-def jpeg_progressive_assets_from_documents(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return _assets_from_documents(
-        spark, sf_dir, encode_jpeg_gray_flat_progressive
-    )
+    return pixel_stats_query(spark, sf_dir, encode_jpeg_gray_flat, decode_jpeg)
 
 
 def multimodal_jpeg_progressive_stats(
@@ -1691,8 +1594,8 @@ def multimodal_jpeg_progressive_stats(
     EOB-run machinery of the AC band scan feed every stat; the flat
     construction makes the multi-scan pipeline lossless, so the query
     shares the grey byte-domain oracle with multimodal_jpeg_stats."""
-    return _fused_pixel_stats(
-        spark, sf_dir, encode_jpeg_gray_flat_progressive
+    return pixel_stats_query(
+        spark, sf_dir, encode_jpeg_gray_flat_progressive, decode_jpeg
     )
 
 
@@ -1703,15 +1606,9 @@ def multimodal_jpeg_progressive_color_stats(
     JPEGs — puts the decoder's multi-component progressive paths
     (interleaved DC scans with per-component predictors, per-component
     AC band scans) on the oracle path via the color closed form."""
-    return _fused_pixel_stats(
-        spark, sf_dir, encode_jpeg_color_flat_progressive
+    return pixel_stats_query(
+        spark, sf_dir, encode_jpeg_color_flat_progressive, decode_jpeg
     )
-
-
-def jpeg_color_assets_from_documents(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return _assets_from_documents(spark, sf_dir, encode_jpeg_color_flat)
 
 
 def multimodal_jpeg_color_stats(
@@ -1721,7 +1618,9 @@ def multimodal_jpeg_color_stats(
     3-component interleaved scan and the JFIF YCbCr→RGB transform are
     on the oracle path — a wrong upsample, predictor interleave, or
     transform constant shifts a stat."""
-    return _fused_pixel_stats(spark, sf_dir, encode_jpeg_color_flat)
+    return pixel_stats_query(
+        spark, sf_dir, encode_jpeg_color_flat, decode_jpeg
+    )
 
 
 # Byte-domain oracle: byte b → 64 pixels of exactly b; rows of
@@ -1768,12 +1667,6 @@ ORDER BY asset_id
 """
 
 
-def jpeg_cmyk_assets_from_documents(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return _assets_from_documents(spark, sf_dir, encode_jpeg_cmyk_flat)
-
-
 def multimodal_jpeg_cmyk_stats(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1781,7 +1674,7 @@ def multimodal_jpeg_cmyk_stats(
     (r10 verdict item 3 — the most common real-crawl refusal after
     progressive): the APP14 parse, 4-component interleaved scan, and
     4-plane assembly are on the oracle path."""
-    return _fused_pixel_stats(spark, sf_dir, encode_jpeg_cmyk_flat)
+    return pixel_stats_query(spark, sf_dir, encode_jpeg_cmyk_flat, decode_jpeg)
 
 
 # CMYK byte-domain oracle: byte b → 64 CMYK pixels (b, min(b+64,255),
@@ -1845,68 +1738,21 @@ ORDER BY asset_id
 JPEG_SELECT_MIN_ROWS = 2
 
 
-def _dims_filter_batches(min_rows: int):
-    """Batch generator: asset pdfs → surviving asset pdfs (header-only
-    dims parse + the height predicate). Factored out of the staged
-    shape so the fused path composes it in-process."""
+def _jpeg_selective(spark, sf_dir: str, min_rows: int) -> DataFrame:
+    """Selective decode: encode → header-only dims pass → height
+    predicate → full decode of the SURVIVORS only, per document inside
+    one Python task. The 100 TB shape: header triage reads a few
+    hundred bytes per asset and gates the expensive pixel decode."""
     cut = 8 * min_rows
 
-    def dims(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            heights = np.fromiter(
-                (parse_jpeg_dims(bytes(p))[1] for p in pdf["payload"]),
-                dtype=np.int32,
-                count=len(pdf),
-            )
-            yield pdf[["asset_id", "payload", "mime"]][heights >= cut]
+    def walk(d: int, text: str):
+        payload = encode_jpeg_gray_flat(
+            np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+        )
+        if parse_jpeg_dims(payload)[1] >= cut:
+            yield (d, *pixel_stats(decode_jpeg(payload)))
 
-    return dims
-
-
-def _jpeg_selective(spark, sf_dir: str, min_rows: int) -> DataFrame:
-    """Selective decode, fused (r14 second pass, guide §4.1): encode →
-    header dims pass → predicate → full decode of survivors, all
-    inside ONE Python task. The staged shape (kept below as
-    `_jpeg_selective_staged`, the equivalence twin) chained THREE
-    mapInPandas nodes with a JVM filter between — every payload
-    crossed the boundary five times; the survivors' pixel decode and
-    the header triage are per-doc-independent, so composing the same
-    batch generators in-process is row-identical (the JVM
-    `height >= 8·min_rows` filter becomes the same int32 comparison
-    in pandas). The 100 TB shape is unchanged: header triage still
-    gates the expensive decode per batch — only the fixture payload
-    round-trips are gone."""
-    synth = _synth_batches(encode_jpeg_gray_flat)
-    dims = _dims_filter_batches(min_rows)
-    return load_docs_spread(spark, sf_dir).mapInPandas(
-        lambda it: _stats_batches(dims(synth(it))), PNG_STATS_SCHEMA
-    )
-
-
-def _jpeg_selective_staged(spark, sf_dir: str, min_rows: int) -> DataFrame:
-    """The r9-r13 three-stage selective pipeline — RETAINED as the
-    equivalence twin of the fused form (pinned in test_opt_r14)."""
-    assets = jpeg_assets_from_documents(spark, sf_dir)
-
-    def dims(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            heights = [
-                parse_jpeg_dims(bytes(p))[1] for p in pdf["payload"]
-            ]
-            out = pdf[["asset_id", "payload", "mime"]].copy()
-            out["height"] = pd.Series(heights, dtype="int32").values
-            yield out
-
-    dims_schema = T.StructType(
-        list(_ASSET_SCHEMA.fields)
-        + [T.StructField("height", T.IntegerType(), True)]
-    )
-    survivors = (
-        assets.mapInPandas(dims, dims_schema)
-        .filter(F.col("height") >= 8 * min_rows)
-        .select("asset_id", "payload", "mime")
-    )
-    return jpeg_pixel_stats(survivors)
+    return walker_query(spark, sf_dir, walk, PNG_STATS_SCHEMA)
 
 
 def multimodal_jpeg_selective_stats(

@@ -40,13 +40,12 @@ and header unfolding are all on the oracle path for every graded row.
 from __future__ import annotations
 
 import binascii
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 _HEX = b"0123456789ABCDEFabcdef"
 _B64_ALPHABET = set(b"ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789+/=\r\n")
@@ -325,38 +324,16 @@ def eml_text_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode. body_text must equal the source text BIT-FOR-BIT, so the
     boundary framing, header unfolding, and QP/base64 decode are all
     on the oracle path for every graded row."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        msg = parse_eml(encode_eml(d, text.encode("utf-8")))
+        leaves = _leaves(msg)
+        body = next(p for p in leaves if p.content_type == "text/plain")
+        atts = [p for p in leaves if p.content_type == "application/octet-stream"]
+        yield (d, msg.headers["subject"], len(leaves), len(atts),
+               sum(len(p.body) for p in atts), body.cte,
+               body.body.decode("utf-8"))
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, sj, np_, na, ab, ce, bt = [], [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                data = (text or "").encode("utf-8")
-                msg = parse_eml(encode_eml(d, data))
-                leaves = _leaves(msg)
-                body = next(p for p in leaves if p.content_type == "text/plain")
-                atts = [p for p in leaves if p.content_type == "application/octet-stream"]
-                ids.append(d)
-                sj.append(msg.headers["subject"])
-                np_.append(len(leaves))
-                na.append(len(atts))
-                ab.append(sum(len(p.body) for p in atts))
-                ce.append(body.cte)
-                bt.append(body.body.decode("utf-8"))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "subject": pd.Series(sj, dtype="object"),
-                    "n_parts": pd.Series(np_, dtype="int32"),
-                    "n_attachments": pd.Series(na, dtype="int32"),
-                    "att_bytes": pd.Series(ab, dtype="int64"),
-                    "cte": pd.Series(ce, dtype="object"),
-                    "body_text": pd.Series(bt, dtype="object"),
-                }
-            )
-
-    return docs.mapInPandas(run, EML_SCHEMA)
+    return walker_query(spark, sf_dir, walk, EML_SCHEMA)
 
 
 # closed forms of encode_eml; body_text ≡ documents.text bit-for-bit.

@@ -45,13 +45,12 @@ load-bearing (a wrong table misplaces every later sync word).
 """
 from __future__ import annotations
 
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 # Bitrate tables in kbps, indexed [1..14]; index 0 = "free format"
 # (refused — length not derivable from the header), 15 = invalid.
@@ -304,40 +303,13 @@ def multimodal_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents → synthetic MP3s (see encode_mp3) → metadata triage.
     Every output field is a closed form of the document row, so the
     DuckDB oracle reproduces the table with CASE arithmetic only."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        m = parse_mp3_meta(encode_mp3(d, text.encode("utf-8")))
+        yield (d, m.id3v2_bytes, m.mpeg_version, m.layer, m.bitrate_kbps,
+               m.sample_rate, m.channel_mode, m.n_frames, m.duration_ms,
+               m.has_id3v1)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols: dict = {k.name: [] for k in MP3_META_SCHEMA.fields}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                m = parse_mp3_meta(encode_mp3(int(doc_id), data))
-                cols["asset_id"].append(int(doc_id))
-                cols["id3v2_bytes"].append(m.id3v2_bytes)
-                cols["mpeg_version"].append(m.mpeg_version)
-                cols["layer"].append(m.layer)
-                cols["bitrate_kbps"].append(m.bitrate_kbps)
-                cols["sample_rate"].append(m.sample_rate)
-                cols["channel_mode"].append(m.channel_mode)
-                cols["n_frames"].append(m.n_frames)
-                cols["duration_ms"].append(m.duration_ms)
-                cols["has_id3v1"].append(m.has_id3v1)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(cols["asset_id"], dtype="int64"),
-                    "id3v2_bytes": pd.Series(cols["id3v2_bytes"], dtype="int32"),
-                    "mpeg_version": cols["mpeg_version"],
-                    "layer": pd.Series(cols["layer"], dtype="int32"),
-                    "bitrate_kbps": pd.Series(cols["bitrate_kbps"], dtype="int32"),
-                    "sample_rate": pd.Series(cols["sample_rate"], dtype="int32"),
-                    "channel_mode": cols["channel_mode"],
-                    "n_frames": pd.Series(cols["n_frames"], dtype="int32"),
-                    "duration_ms": pd.Series(cols["duration_ms"], dtype="int64"),
-                    "has_id3v1": pd.Series(cols["has_id3v1"], dtype="bool"),
-                }
-            )
-
-    return docs.mapInPandas(run, MP3_META_SCHEMA)
+    return walker_query(spark, sf_dir, walk, MP3_META_SCHEMA)
 
 
 # spf·1000/rate per config: cfg0 1152000/44100, cfg1 576000/22050,
@@ -521,34 +493,13 @@ def multimodal_mp3_id3(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame extraction. The v2.3-plain vs v2.4-syncsafe frame-size
     split, three text encodings, padding stop, and absent-frame NULL
     are all on the oracle path."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        tag = parse_id3v2(encode_mp3_tagged(d, text))
+        yield (d, tag.version, tag.n_frames, id3_first(tag, "TIT2"),
+               id3_first(tag, "TPE1"), id3_first(tag, "TALB"),
+               id3_first(tag, "TLAN"))
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ver, nfr, tit, art, alb, lng = [], [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                tag = parse_id3v2(encode_mp3_tagged(d, text or ""))
-                ids.append(d)
-                ver.append(tag.version)
-                nfr.append(tag.n_frames)
-                tit.append(id3_first(tag, "TIT2"))
-                art.append(id3_first(tag, "TPE1"))
-                alb.append(id3_first(tag, "TALB"))
-                lng.append(id3_first(tag, "TLAN"))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "id3_version": pd.Series(ver, dtype="int32"),
-                    "n_frames": pd.Series(nfr, dtype="int32"),
-                    "title": tit,
-                    "artist": art,
-                    "album": alb,
-                    "language": lng,
-                }
-            )
-
-    return docs.mapInPandas(run, MP3_ID3_SCHEMA)
+    return walker_query(spark, sf_dir, walk, MP3_ID3_SCHEMA)
 
 
 MP3_ID3_SQL = """

@@ -24,13 +24,12 @@ form DuckDB computes from `documents` without MP4 knowledge.
 from __future__ import annotations
 
 import struct
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 _CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts"}
 
@@ -174,36 +173,20 @@ def multimodal_mp4_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     every 5th doc so both versions ride the driver path, the text
     itself as mdat payload the walker must SKIP) → metadata triage.
     All fields are closed forms of the document row for the oracle."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, brands, scales, durs, tracks = [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                payload = encode_mp4_meta(
-                    duration=len(data),
-                    n_tracks=1 + int(doc_id) % 3,
-                    version=1 if int(doc_id) % 5 == 0 else 0,
-                    mdat=data,
-                )
-                m = parse_mp4_meta(payload)
-                ids.append(int(doc_id))
-                brands.append(m.brand)
-                scales.append(m.timescale)
-                durs.append(m.duration * 1000 // m.timescale)
-                tracks.append(m.n_tracks)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "brand": brands,
-                    "timescale": pd.Series(scales, dtype="int32"),
-                    "duration_ms": pd.Series(durs, dtype="int64"),
-                    "n_tracks": pd.Series(tracks, dtype="int32"),
-                }
+    def walk(d: int, text: str):
+        data = text.encode("utf-8")
+        m = parse_mp4_meta(
+            encode_mp4_meta(
+                duration=len(data),
+                n_tracks=1 + d % 3,
+                version=1 if d % 5 == 0 else 0,
+                mdat=data,
             )
+        )
+        yield (d, m.brand, m.timescale, m.duration * 1000 // m.timescale,
+               m.n_tracks)
 
-    return docs.mapInPandas(run, MP4_META_SCHEMA)
+    return walker_query(spark, sf_dir, walk, MP4_META_SCHEMA)
 
 
 MULTIMODAL_MP4_SQL = """

@@ -1,8 +1,11 @@
 """Multimodal (binary) column operators.
 
 Beyond-reference capability: treat image/audio/video payloads as opaque
-`binary` columns with typed metadata, processed by Arrow-batched Pandas
-UDFs over `mapInPandas`. PCM RIFF/WAVE audio DECODES FOR REAL (stdlib
+`binary` columns with typed metadata. The asset-frame operators
+(extract_features, resize_assets, sample_frames, audio_energy) are
+Arrow-batched Pandas UDFs over `mapInPandas`; the real-decode queries
+synthesize, decode and reduce each document inside the one
+`walker.walker_query` boundary. PCM RIFF/WAVE audio DECODES FOR REAL (stdlib
 RIFF parse, see decode_wav + multimodal_wav_rms), and so does the
 COMPLETE baseline PNG matrix (stdlib zlib inflate + full
 scanline-filter reconstruction, all color types, depths 1-16, Adam7 —
@@ -29,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from orionld_to_hive_spark.operators.walker import walker_query
 from orionld_to_hive_spark.sources.warehouse import (
     load_docs_spread,
     load_table,
@@ -595,96 +599,62 @@ MULTIMODAL_AUDIO_SQL = _audio_sql(1, int(AUDIO_ACTIVE_RMS * 1e9))
 # byte-domain rms / 128 bit-for-bit (sqrt(x/2^14) == sqrt(x)/2^7 —
 # IEEE sqrt is correctly rounded and /2^k is exact).
 #
-# Scale shape: synth and decode+window are both partition-local
-# mapInPandas (Arrow-batched, no shuffle); the decode loop is per
-# payload — inherent to container formats, the window math inside each
-# payload is vectorized numpy. At 100 TB the payloads arrive from
+# Scale shape: synth + decode + window run per document inside the one
+# walker_query boundary (partition-local, no shuffle); the decode loop is
+# per payload — inherent to container formats, the window math inside
+# each payload is vectorized numpy. At 100 TB the payloads arrive from
 # storage instead of the synth step; everything downstream is unchanged.
 WAV_RATE = 16000
 WAV_ACTIVE_RMS = AUDIO_ACTIVE_RMS / 128.0  # same threshold, sample domain
 
 
-def _wav_synth_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _window_rms(samples: np.ndarray, active9: int) -> tuple:
+    """(n_windows, mean_rms, max_rms, n_active) of decoded samples,
+    same window/hop/stat shape as audio_energy. Both real-decode paths
+    (16-bit PCM and G.711) yield exact integer magnitudes sample·32768,
+    so the squared-magnitude prefix sum is kept in int64 (max |mag|
+    32768 ⇒ ≤ 2^30 per sample) and each window sum — at most
+    AUDIO_WIN·2^30 ≪ 2^53 — converts to float64 exactly: the 1e9-scaled
+    rms codes match the SQL oracle's integer window math bit-for-bit
+    with no whole-document bound. An empty payload is (0, 0, 0, 0)."""
+    n = len(samples)
+    if n == 0:
+        return 0, 0.0, 0.0, 0
+    nw = (n - AUDIO_WIN) // AUDIO_HOP + 1 if n >= AUDIO_WIN else 1
+    mags = (samples * 32768.0).astype(np.int64)
+    csq = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(mags * mags, out=csq[1:])
+    starts = np.arange(0, nw * AUDIO_HOP, AUDIO_HOP)
+    wlen = min(AUDIO_WIN, n)
+    rms = np.sqrt((csq[starts + wlen] - csq[starts]) / wlen) / 32768.0
+    r9 = np.floor(rms * 1e9 + 0.5).astype(np.int64)
+    return (
+        nw,
+        np.floor((r9.sum() / 1e9) / nw * 1e6 + 0.5) / 1e6,
+        np.floor(r9.max() / 1e9 * 1e6 + 0.5) / 1e6,
+        int((r9 > active9).sum()),
+    )
+
+
+def _wav_walk(d: int, text: str):
     import io
     import wave
 
-    for pdf in it:
-        payloads = []
-        for text in pdf["text"]:
-            raw = np.frombuffer(
-                (text or "").encode("utf-8"), dtype=np.uint8
-            )
-            pcm = ((raw.astype(np.int16) - 128) * 256).astype("<i2")
-            bio = io.BytesIO()
-            with wave.open(bio, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(WAV_RATE)
-                w.writeframes(pcm.tobytes())
-            payloads.append(bio.getvalue())
-        yield pd.DataFrame(
-            {
-                "asset_id": pdf["doc_id"],
-                "payload": payloads,
-                "mime": "audio/wav",
-            }
-        )
-
-def wav_assets_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
-    return docs.mapInPandas(_wav_synth_batches, _PNG_ASSET_SCHEMA)
-
-
-def _wav_energy_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        out = {
-            "asset_id": pdf["asset_id"].to_numpy(),
-            "n_windows": np.zeros(len(pdf), dtype="int32"),
-            "mean_rms": np.zeros(len(pdf)),
-            "max_rms": np.zeros(len(pdf)),
-            "n_active": np.zeros(len(pdf), dtype="int32"),
-        }
-        for j, payload in enumerate(pdf["payload"]):
-            samples, _rate = decode_wav(bytes(payload))
-            n = len(samples)
-            if n == 0:
-                continue
-            nw = (
-                (n - AUDIO_WIN) // AUDIO_HOP + 1 if n >= AUDIO_WIN else 1
-            )
-            dev256 = samples * 32768.0  # exact int values as float64
-            csq = np.concatenate(([0.0], np.cumsum(dev256 * dev256)))
-            starts = np.arange(nw) * AUDIO_HOP
-            wlen = min(AUDIO_WIN, n)
-            sumsq = csq[starts + wlen] - csq[starts]
-            rms = np.sqrt(sumsq / wlen) / 32768.0
-            r9 = np.floor(rms * 1e9 + 0.5).astype(np.int64)
-            out["n_windows"][j] = nw
-            out["mean_rms"][j] = (
-                np.floor((r9.sum() / 1e9) / nw * 1e6 + 0.5) / 1e6
-            )
-            out["max_rms"][j] = np.floor(r9.max() / 1e9 * 1e6 + 0.5) / 1e6
-            out["n_active"][j] = int(
-                (r9 > int(WAV_ACTIVE_RMS * 1e9)).sum()
-            )
-        yield pd.DataFrame(out)
-
-def wav_audio_energy(df: DataFrame) -> DataFrame:
-    """Windowed RMS over REAL-decoded PCM samples (decode_wav), same
-    window/hop/stat shape as audio_energy. Sample² sums run on
-    (sample·32768)² integers — exact in float64 — so the 1e9-scaled
-    rms codes match the oracle's integer math bit-for-bit."""
-    return df.mapInPandas(_wav_energy_batches, ENERGY_SCHEMA)
+    raw = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+    pcm = ((raw.astype(np.int16) - 128) * 256).astype("<i2")
+    bio = io.BytesIO()
+    with wave.open(bio, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(WAV_RATE)
+        w.writeframes(pcm.tobytes())
+    samples, _rate = decode_wav(bio.getvalue())
+    yield (d, *_window_rms(samples, int(WAV_ACTIVE_RMS * 1e9)))
 
 
 def multimodal_wav_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused single-crossing path (r14 second pass, guide §4.1) — the
-    # WAV twin of jpeg._fused_pixel_stats
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
-    return docs.mapInPandas(
-        lambda it: _wav_energy_batches(_wav_synth_batches(it)),
-        ENERGY_SCHEMA,
-    )
+    """Windowed RMS over REAL-decoded 16-bit PCM WAVs (decode_wav)."""
+    return walker_query(spark, sf_dir, _wav_walk, ENERGY_SCHEMA)
 
 
 MULTIMODAL_WAV_SQL = _audio_sql(128, int(WAV_ACTIVE_RMS * 1e9))
@@ -700,93 +670,22 @@ MULTIMODAL_WAV_SQL = _audio_sql(128, int(WAV_ACTIVE_RMS * 1e9))
 MULAW_ACTIVE_RMS9 = 300_000_000  # rms > 0.3 (sample domain, 1e9-scaled)
 
 
-def _mulaw_synth_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _mulaw_walk(d: int, text: str):
     import struct
 
-    for pdf in it:
-        payloads = []
-        for text in pdf["text"]:
-            data = (text or "").encode("utf-8")
-            fmt = struct.pack(
-                "<HHIIHH", 7, 1, WAV_RATE, WAV_RATE, 1, 8
-            )
-            body = (
-                b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
-                + b"data" + struct.pack("<I", len(data)) + data
-                + (b"\x00" if len(data) & 1 else b"")
-            )
-            payloads.append(
-                b"RIFF" + struct.pack("<I", len(body)) + body
-            )
-        yield pd.DataFrame(
-            {
-                "asset_id": pdf["doc_id"],
-                "payload": payloads,
-                "mime": "audio/basic",
-            }
-        )
-
-def wav_mulaw_assets_from_documents(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
-    return docs.mapInPandas(_mulaw_synth_batches, _PNG_ASSET_SCHEMA)
-
-
-def mulaw_audio_energy(df: DataFrame) -> DataFrame:
-    """Same windowed-RMS shape as wav_audio_energy, over REAL-decoded
-    G.711 samples; magnitudes are exact integers. The prefix-sum of
-    squared magnitudes is kept in int64 (max |mag| = 32124 ⇒ ~1.03e9
-    per sample ⇒ exact up to ~8.9e9 samples per document), so the
-    per-window sum — at most AUDIO_WIN·1.03e9 ≪ 2^53 — converts to
-    float64 exactly and the SQL oracle's integer window sums are
-    matched bit-for-bit with no whole-document float53 bound."""
-
-    return df.mapInPandas(_mulaw_energy_batches, ENERGY_SCHEMA)
-
-
-def _mulaw_energy_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        out = {
-            "asset_id": pdf["asset_id"].to_numpy(),
-            "n_windows": np.zeros(len(pdf), dtype="int32"),
-            "mean_rms": np.zeros(len(pdf)),
-            "max_rms": np.zeros(len(pdf)),
-            "n_active": np.zeros(len(pdf), dtype="int32"),
-        }
-        for j, payload in enumerate(pdf["payload"]):
-            samples, _rate = decode_wav(bytes(payload))
-            n = len(samples)
-            if n == 0:
-                continue
-            nw = (
-                (n - AUDIO_WIN) // AUDIO_HOP + 1 if n >= AUDIO_WIN else 1
-            )
-            mags = np.rint(samples * 32768.0).astype(np.int64)
-            csq = np.concatenate(
-                ([0], np.cumsum(mags * mags, dtype=np.int64))
-            )
-            starts = np.arange(nw) * AUDIO_HOP
-            wlen = min(AUDIO_WIN, n)
-            sumsq = (csq[starts + wlen] - csq[starts]).astype(np.float64)
-            rms = np.sqrt(sumsq / wlen) / 32768.0
-            r9 = np.floor(rms * 1e9 + 0.5).astype(np.int64)
-            out["n_windows"][j] = nw
-            out["mean_rms"][j] = (
-                np.floor((r9.sum() / 1e9) / nw * 1e6 + 0.5) / 1e6
-            )
-            out["max_rms"][j] = np.floor(r9.max() / 1e9 * 1e6 + 0.5) / 1e6
-            out["n_active"][j] = int((r9 > MULAW_ACTIVE_RMS9).sum())
-        yield pd.DataFrame(out)
+    data = text.encode("utf-8")
+    fmt = struct.pack("<HHIIHH", 7, 1, WAV_RATE, WAV_RATE, 1, 8)
+    body = (
+        b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
+        + (b"\x00" if len(data) & 1 else b"")
+    )
+    samples, _rate = decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
+    yield (d, *_window_rms(samples, MULAW_ACTIVE_RMS9))
 
 
 def multimodal_wav_mulaw_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused single-crossing path (r14 second pass, guide §4.1)
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
-    return docs.mapInPandas(
-        lambda it: _mulaw_energy_batches(_mulaw_synth_batches(it)),
-        ENERGY_SCHEMA,
-    )
+    return walker_query(spark, sf_dir, _mulaw_walk, ENERGY_SCHEMA)
 
 
 # the G.711 expansion in SQL: u = ~code = 255 - code; exp/mantissa
@@ -872,8 +771,9 @@ ORDER BY asset_id
 # parser: signature, CRC-verified chunks, IHDR sanity, multi-IDAT
 # concatenation, inflate, unfilter.
 #
-# Scale shape: synth and decode are partition-local mapInPandas (Arrow
-# batches, zero shuffle); per-row unfiltering is bounded by image width.
+# Scale shape: synth and decode run per document inside the one
+# walker_query boundary (Arrow batches, zero shuffle); per-row
+# unfiltering is bounded by image width.
 # At 100 TB the payloads come from storage and the synth stage drops
 # out; decode/stats are unchanged.
 PNG_W = 32
@@ -1368,119 +1268,53 @@ PNG_STATS_SCHEMA = T.StructType(
 )
 
 
-_PNG_ASSET_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-    ]
-)
-
-
-def _png_synth_batches(encoder):
-    """Batch generator factory: (doc_id, text) pdfs → PNG asset pdfs.
-    Module-level so the fused query paths compose it in-process with
-    the stats generator (guide §4.1 — same single-crossing rationale
-    as the JPEG twin jpeg._fused_pixel_stats: the payload bytes never
-    cross the Python boundary)."""
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                encoder(
-                    np.frombuffer((t or "").encode("utf-8"), dtype=np.uint8)
-                )
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "mime": "image/png",
-                }
-            )
-
-    return synth
-
-
-def png_assets_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
-    return docs.mapInPandas(_png_synth_batches(encode_png_gray), _PNG_ASSET_SCHEMA)
-
-
-def png_pixel_stats(df: DataFrame) -> DataFrame:
-    """Per-asset pixel statistics over REAL-decoded PNGs. mean_pixel
-    uses the portable floor(x·1e6 + 0.5)/1e6 rounding; pixel sums are
-    exact integers in float64, so the DuckDB byte-domain oracle matches
-    bit-for-bit — but only if every scanline filter was reversed
-    correctly."""
-
-    return df.mapInPandas(_png_stats_batches, PNG_STATS_SCHEMA)
-
-
-def _png_stats_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        n = len(pdf)
-        out = {
-            "asset_id": pdf["asset_id"].to_numpy(),
-            "width": np.zeros(n, dtype="int32"),
-            "height": np.zeros(n, dtype="int32"),
-            "n_pixels": np.zeros(n, dtype="int32"),
-            "mean_pixel": np.zeros(n),
-            "max_pixel": np.zeros(n, dtype="int32"),
-            "n_dark": np.zeros(n, dtype="int32"),
-        }
-        for j, payload in enumerate(pdf["payload"]):
-            img = decode_png(bytes(payload))
-            px, w, h = img.samples, img.width, img.height
-            total = int(px.sum(dtype=np.int64))
-            out["width"][j] = w
-            out["height"][j] = h
-            out["n_pixels"][j] = px.size
-            out["mean_pixel"][j] = (
-                np.floor(total / px.size * 1e6 + 0.5) / 1e6
-            )
-            out["max_pixel"][j] = int(px.max())
-            out["n_dark"][j] = int((px < PNG_DARK).sum())
-        yield pd.DataFrame(out)
-
-
-def _fused_png_stats(spark: SparkSession, sf_dir: str, encoder) -> DataFrame:
-    """Encode + decode inside ONE Python task — the PNG twin of
-    jpeg._fused_pixel_stats (r14 second pass, guide §4.1): identical
-    batch generators composed in-process, payloads never cross the
-    boundary; staged ≡ fused pinned in tests/test_opt_r14.py."""
-    synth = _png_synth_batches(encoder)
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
-    return docs.mapInPandas(
-        lambda it: _png_stats_batches(synth(it)), PNG_STATS_SCHEMA
+def pixel_stats(img) -> tuple:
+    """(width, height, n_pixels, mean_pixel, max_pixel, n_dark) of a
+    decoded PNG or JPEG image. mean_pixel uses the portable
+    floor(x·1e6 + 0.5)/1e6 rounding; pixel sums are exact integers in
+    float64, so the DuckDB byte-domain oracles match bit-for-bit — but
+    only if every decode stage (PNG scanline filters; JPEG Huffman,
+    dequant, IDCT, color transform) was reversed correctly."""
+    px = img.samples
+    return (
+        img.width,
+        img.height,
+        px.size,
+        np.floor(int(px.sum(dtype=np.int64)) / px.size * 1e6 + 0.5) / 1e6,
+        int(px.max()),
+        int((px < PNG_DARK).sum()),
     )
+
+
+def pixel_stats_query(
+    spark: SparkSession, sf_dir: str, encode, decode
+) -> DataFrame:
+    """Document bytes → `encode` → the REAL `decode` → one pixel_stats
+    row, inside ONE Python task per document: the synthesized payload
+    never crosses the boundary (only doc text in, stat rows out). In
+    production the asset bytes arrive from parquet and cross once
+    either way; here the fixture round-trip would be pure overhead."""
+
+    def walk(d: int, text: str):
+        raw = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+        yield (d, *pixel_stats(decode(encode(raw))))
+
+    return walker_query(spark, sf_dir, walk, PNG_STATS_SCHEMA)
 
 
 def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fused_png_stats(spark, sf_dir, encode_png_gray)
-
-
-def palette_png_assets_from_documents(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Paletted twin of png_assets_from_documents: each document's
-    utf-8 bytes become color-type-3 indices (byte % 4 into
-    PNG_PALETTE)."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
-    return docs.mapInPandas(
-        _png_synth_batches(encode_png_palette), _PNG_ASSET_SCHEMA
-    )
+    return pixel_stats_query(spark, sf_dir, encode_png_gray, decode_png)
 
 
 def multimodal_png_palette_stats(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Pixel stats over REAL-decoded PALETTED PNGs — the color-type-3
-    end-to-end proof: the oracle derives every stat from the hex dump
-    through the byte%4 palette map, so a wrong PLTE lookup or a filter
-    slip over the index stream breaks the hash."""
-    return _fused_png_stats(spark, sf_dir, encode_png_palette)
+    end-to-end proof: each document's utf-8 bytes become indices
+    (byte % 4 into PNG_PALETTE), and the oracle derives every stat
+    from the hex dump through that palette map, so a wrong PLTE lookup
+    or a filter slip over the index stream breaks the hash."""
+    return pixel_stats_query(spark, sf_dir, encode_png_palette, decode_png)
 
 
 def multimodal_png_palette4_stats(
@@ -1494,7 +1328,7 @@ def multimodal_png_palette4_stats(
     (channel sum 51·idx, max 17·idx, dark = idx < 2), so a bit-unpack
     slip — wrong nibble order, pad bits leaking into samples, a filter
     applied after unpacking instead of before — breaks the hash."""
-    return _fused_png_stats(spark, sf_dir, encode_png_palette4)
+    return pixel_stats_query(spark, sf_dir, encode_png_palette4, decode_png)
 
 
 # Byte-domain twin: the decoded raster is the utf-8 bytes zero-padded
@@ -1687,49 +1521,28 @@ def multimodal_png_alpha_stats(
     map, so a decoder that drops, defaults, or mis-maps alpha breaks
     the hash. Same Arrow-batched partition-local shape as the other
     decode ops."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
 
-    def synth_and_stats(
-        it: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            out = {
-                "asset_id": pdf["doc_id"].to_numpy(),
-                "width": np.zeros(n, dtype="int32"),
-                "height": np.zeros(n, dtype="int32"),
-                "n_pixels": np.zeros(n, dtype="int32"),
-                "n_opaque": np.zeros(n, dtype="int32"),
-                "n_partial": np.zeros(n, dtype="int32"),
-                "n_transparent": np.zeros(n, dtype="int32"),
-                "premult_sum": np.zeros(n, dtype="int64"),
-                "mean_premult": np.zeros(n),
-            }
-            for j, t in enumerate(pdf["text"]):
-                payload = encode_png_palette_alpha(
-                    np.frombuffer((t or "").encode("utf-8"), dtype=np.uint8)
-                )
-                img = decode_png(payload)
-                assert img.channels == 4  # RGBA came back
-                w, h = img.width, img.height
-                rgba = img.samples.reshape(-1, 4).astype(np.int64)
-                a = rgba[:, 3]
-                premult = (rgba[:, :3] * a[:, None] // 255).sum()
-                out["width"][j] = w
-                out["height"][j] = h
-                out["n_pixels"][j] = w * h
-                out["n_opaque"][j] = int((a == 255).sum())
-                out["n_partial"][j] = int(((a > 0) & (a < 255)).sum())
-                out["n_transparent"][j] = int((a == 0).sum())
-                out["premult_sum"][j] = int(premult)
-                out["mean_premult"][j] = (
-                    np.floor(premult / (3 * w * h) * 1e6 + 0.5) / 1e6
-                )
-            yield pd.DataFrame(out)
+    def walk(d: int, text: str):
+        img = decode_png(
+            encode_png_palette_alpha(
+                np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+            )
+        )
+        assert img.channels == 4  # RGBA came back
+        w, h = img.width, img.height
+        rgba = img.samples.reshape(-1, 4).astype(np.int64)
+        a = rgba[:, 3]
+        premult = int((rgba[:, :3] * a[:, None] // 255).sum())
+        yield (
+            d, w, h, w * h,
+            int((a == 255).sum()),
+            int(((a > 0) & (a < 255)).sum()),
+            int((a == 0).sum()),
+            premult,
+            np.floor(premult / (3 * w * h) * 1e6 + 0.5) / 1e6,
+        )
 
-    return docs.mapInPandas(
-        synth_and_stats, PNG_ALPHA_STATS_SCHEMA
-    )
+    return walker_query(spark, sf_dir, walk, PNG_ALPHA_STATS_SCHEMA)
 
 
 # Alpha byte-domain twin: per index the (alpha, premultiplied-channel

@@ -39,13 +39,12 @@ graded row.
 from __future__ import annotations
 
 import struct
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 _MAGIC = b"OggS"
 
@@ -296,34 +295,12 @@ def multimodal_ogg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents → Ogg fixtures (see encode_ogg) → page walk with full
     CRC verification → codec triage. Every column is a closed form of
     the document row."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        m = parse_ogg_meta(encode_ogg(d, text.encode("utf-8")))
+        yield (d, m.codec, m.channels, m.sample_rate, m.n_pages,
+               m.n_packets, m.duration_ms)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, cd, ch, sr, np_, nk, dm = [], [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                m = parse_ogg_meta(encode_ogg(d, (text or "").encode("utf-8")))
-                ids.append(d)
-                cd.append(m.codec)
-                ch.append(m.channels)
-                sr.append(m.sample_rate)
-                np_.append(m.n_pages)
-                nk.append(m.n_packets)
-                dm.append(m.duration_ms)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "codec": pd.Series(cd, dtype="object"),
-                    "channels": pd.Series(ch, dtype="int32"),
-                    "sample_rate": pd.Series(sr, dtype="int32"),
-                    "n_pages": pd.Series(np_, dtype="int32"),
-                    "n_packets": pd.Series(nk, dtype="int32"),
-                    "duration_ms": pd.Series(dm, dtype="int64"),
-                }
-            )
-
-    return docs.mapInPandas(run, OGG_SCHEMA)
+    return walker_query(spark, sf_dir, walk, OGG_SCHEMA)
 
 
 # closed forms of encode_ogg: codec/channels by parity, vorbis rate by

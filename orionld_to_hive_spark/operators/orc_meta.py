@@ -42,11 +42,10 @@ from __future__ import annotations
 import io
 from typing import Iterator, NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 _COMPRESSION = {0: "NONE", 1: "ZLIB", 2: "SNAPPY", 3: "LZO", 4: "LZ4", 5: "ZSTD"}
 
@@ -245,32 +244,12 @@ def orc_footer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     postscript/footer walk. Row/stripe/schema accounting is a closed
     form of the document row; the Σ-stripe-rows ≡ footer-rows
     cross-check runs on every asset."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        m = parse_orc_meta(encode_orc(d, text))
+        yield (d, m.compression, m.n_rows, m.n_stripes, m.n_leaf_columns,
+               m.field_names)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, cps, nrs, nss, nls, fns = [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                m = parse_orc_meta(encode_orc(d, text or ""))
-                ids.append(d)
-                cps.append(m.compression)
-                nrs.append(m.n_rows)
-                nss.append(m.n_stripes)
-                nls.append(m.n_leaf_columns)
-                fns.append(m.field_names)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "compression": cps,
-                    "n_rows": pd.Series(nrs, dtype="int32"),
-                    "n_stripes": pd.Series(nss, dtype="int32"),
-                    "n_leaf_columns": pd.Series(nls, dtype="int32"),
-                    "field_names": fns,
-                }
-            )
-
-    return docs.mapInPandas(run, ORC_SCHEMA)
+    return walker_query(spark, sf_dir, walk, ORC_SCHEMA)
 
 
 ORC_SQL = """

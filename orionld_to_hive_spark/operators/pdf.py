@@ -55,14 +55,13 @@ merge the xref chain, and walk the page tree.
 from __future__ import annotations
 
 import zlib
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
@@ -845,32 +844,12 @@ def multimodal_pdf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     The startxref chase, /Prev chain merge, entry verification,
     indirect-/Length resolution, and page-tree walk are all on the
     oracle path for every graded row."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        m = parse_pdf_meta(encode_pdf(d, text.encode("utf-8")))
+        yield (d, m.version, m.n_objects, m.n_pages, m.content_bytes,
+               m.n_revisions)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, vs, no, np_, cb, nr = [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                m = parse_pdf_meta(encode_pdf(d, (text or "").encode("utf-8")))
-                ids.append(d)
-                vs.append(m.version)
-                no.append(m.n_objects)
-                np_.append(m.n_pages)
-                cb.append(m.content_bytes)
-                nr.append(m.n_revisions)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "version": pd.Series(vs, dtype="object"),
-                    "n_objects": pd.Series(no, dtype="int32"),
-                    "n_pages": pd.Series(np_, dtype="int32"),
-                    "content_bytes": pd.Series(cb, dtype="int64"),
-                    "n_revisions": pd.Series(nr, dtype="int32"),
-                }
-            )
-
-    return docs.mapInPandas(run, PDF_SCHEMA)
+    return walker_query(spark, sf_dir, walk, PDF_SCHEMA)
 
 
 # closed forms of encode_pdf: n = 1 + id%4 pages; objects = catalog +
@@ -912,38 +891,12 @@ def pdf_xref_stream_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     graded row now also exercises the §7.5.8 machinery: FlateDecode,
     PNG Up unfiltering (even ids), three /W width mixes, /Index
     subsections, and stream→stream /Prev chaining (ids % 3 == 0)."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        m = parse_pdf_meta(encode_pdf_xref(d, text.encode("utf-8")))
+        yield (d, m.version, m.n_objects, m.n_pages, m.content_bytes,
+               m.n_revisions, m.n_xref_streams, m.predictor)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols: dict[str, list] = {k: [] for k in (
-                "asset_id", "version", "n_objects", "n_pages",
-                "content_bytes", "n_revisions", "n_xref_streams", "predictor")}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                m = parse_pdf_meta(encode_pdf_xref(d, (text or "").encode("utf-8")))
-                cols["asset_id"].append(d)
-                cols["version"].append(m.version)
-                cols["n_objects"].append(m.n_objects)
-                cols["n_pages"].append(m.n_pages)
-                cols["content_bytes"].append(m.content_bytes)
-                cols["n_revisions"].append(m.n_revisions)
-                cols["n_xref_streams"].append(m.n_xref_streams)
-                cols["predictor"].append(m.predictor)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(cols["asset_id"], dtype="int64"),
-                    "version": pd.Series(cols["version"], dtype="object"),
-                    "n_objects": pd.Series(cols["n_objects"], dtype="int32"),
-                    "n_pages": pd.Series(cols["n_pages"], dtype="int32"),
-                    "content_bytes": pd.Series(cols["content_bytes"], dtype="int64"),
-                    "n_revisions": pd.Series(cols["n_revisions"], dtype="int32"),
-                    "n_xref_streams": pd.Series(cols["n_xref_streams"], dtype="int32"),
-                    "predictor": pd.Series(cols["predictor"], dtype="int32"),
-                }
-            )
-
-    return docs.mapInPandas(run, XREF_SCHEMA)
+    return walker_query(spark, sf_dir, walk, XREF_SCHEMA)
 
 
 # closed forms of encode_pdf_xref: n = 1 + id%4 pages; in-use objects
@@ -988,30 +941,11 @@ def pdf_hybrid_xref_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     triage. Two of each asset's objects exist ONLY in the /XRefStm
     stream, so the object count certifies that the hybrid merge ran —
     a classic-only walk would read 2 fewer objects per asset."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        m = parse_pdf_meta(encode_pdf_hybrid(d, text.encode("utf-8")))
+        yield (d, m.n_objects, m.n_pages, m.content_bytes, m.n_xref_streams)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, no, np_, cb, nx = [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                m = parse_pdf_meta(encode_pdf_hybrid(d, (text or "").encode("utf-8")))
-                ids.append(d)
-                no.append(m.n_objects)
-                np_.append(m.n_pages)
-                cb.append(m.content_bytes)
-                nx.append(m.n_xref_streams)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "n_objects": pd.Series(no, dtype="int32"),
-                    "n_pages": pd.Series(np_, dtype="int32"),
-                    "content_bytes": pd.Series(cb, dtype="int64"),
-                    "n_xref_streams": pd.Series(nx, dtype="int32"),
-                }
-            )
-
-    return docs.mapInPandas(run, HYBRID_SCHEMA)
+    return walker_query(spark, sf_dir, walk, HYBRID_SCHEMA)
 
 
 # closed forms of encode_pdf_hybrid: 2 + 2n visible objects + the two

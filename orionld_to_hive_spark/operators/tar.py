@@ -34,13 +34,12 @@ from __future__ import annotations
 
 import io
 import tarfile
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 _BLOCK = 512
 
@@ -357,32 +356,12 @@ def webdataset_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit. Every field is a closed form of the document row; the
     walker's checksum verification and 512-block arithmetic are on
     the oracle path for every member."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        m = parse_webdataset_meta(encode_webdataset(d, text.encode("utf-8")))
+        yield (d, m.n_members, m.n_samples, m.total_bytes, m.txt_bytes,
+               m.complete)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, nm, ns, tb, xb, cp = [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                m = parse_webdataset_meta(encode_webdataset(int(doc_id), data))
-                ids.append(int(doc_id))
-                nm.append(m.n_members)
-                ns.append(m.n_samples)
-                tb.append(m.total_bytes)
-                xb.append(m.txt_bytes)
-                cp.append(m.complete)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "n_members": pd.Series(nm, dtype="int32"),
-                    "n_samples": pd.Series(ns, dtype="int32"),
-                    "total_bytes": pd.Series(tb, dtype="int64"),
-                    "txt_bytes": pd.Series(xb, dtype="int64"),
-                    "complete": pd.Series(cp, dtype="bool"),
-                }
-            )
-
-    return docs.mapInPandas(run, WDS_SCHEMA)
+    return walker_query(spark, sf_dir, walk, WDS_SCHEMA)
 
 
 # per doc: .txt = octet_length(text); .cls = 1 byte; even ids add a
@@ -421,38 +400,14 @@ def webdataset_manifest_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_members and ext_kind is decided by doc_id parity — the oracle
     checks the walker consumed every PAX record / L-member it was
     owed, with member accounting identical to the strict query."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        m = parse_webdataset_meta_tolerant(
+            encode_webdataset_longkey(d, text.encode("utf-8"))
+        )
+        yield (d, m.n_members, m.n_samples, m.total_bytes, m.txt_bytes,
+               m.complete, m.n_ext, m.ext_kind)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, nm, ns, tb, xb, cp, ne, ek = [], [], [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                m = parse_webdataset_meta_tolerant(
-                    encode_webdataset_longkey(int(doc_id), data)
-                )
-                ids.append(int(doc_id))
-                nm.append(m.n_members)
-                ns.append(m.n_samples)
-                tb.append(m.total_bytes)
-                xb.append(m.txt_bytes)
-                cp.append(m.complete)
-                ne.append(m.n_ext)
-                ek.append(m.ext_kind)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "n_members": pd.Series(nm, dtype="int32"),
-                    "n_samples": pd.Series(ns, dtype="int32"),
-                    "total_bytes": pd.Series(tb, dtype="int64"),
-                    "txt_bytes": pd.Series(xb, dtype="int64"),
-                    "complete": pd.Series(cp, dtype="bool"),
-                    "n_ext": pd.Series(ne, dtype="int32"),
-                    "ext_kind": pd.Series(ek, dtype="object"),
-                }
-            )
-
-    return docs.mapInPandas(run, WDS_TOL_SCHEMA)
+    return walker_query(spark, sf_dir, walk, WDS_TOL_SCHEMA)
 
 
 # closed forms: members = .txt + .cls (+ .json when id%3==0); one

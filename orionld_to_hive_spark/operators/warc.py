@@ -40,13 +40,12 @@ WARC knowledge.
 from __future__ import annotations
 
 import zlib
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 _CRLF = b"\r\n"
 _MANDATORY = ("warc-type", "warc-record-id", "warc-date", "content-length")
@@ -617,36 +616,12 @@ def multimodal_warc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the even-doc_id assets additionally roundtrip real gzip members
     (zlib inflate + CRC verified inside the decoder), so the oracle
     certifies the full Common Crawl storage profile path."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        m = parse_warc_meta(encode_warc(d, text.encode("utf-8")))
+        yield (d, m.n_records, m.n_response, m.response_bytes,
+               m.total_bytes, m.first_uri, m.gzipped)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols: dict = {f.name: [] for f in WARC_META_SCHEMA.fields}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                m = parse_warc_meta(encode_warc(int(doc_id), data))
-                cols["asset_id"].append(int(doc_id))
-                cols["n_records"].append(m.n_records)
-                cols["n_response"].append(m.n_response)
-                cols["response_bytes"].append(m.response_bytes)
-                cols["total_bytes"].append(m.total_bytes)
-                cols["first_uri"].append(m.first_uri)
-                cols["gzipped"].append(m.gzipped)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(cols["asset_id"], dtype="int64"),
-                    "n_records": pd.Series(cols["n_records"], dtype="int32"),
-                    "n_response": pd.Series(cols["n_response"], dtype="int32"),
-                    "response_bytes": pd.Series(
-                        cols["response_bytes"], dtype="int64"
-                    ),
-                    "total_bytes": pd.Series(cols["total_bytes"], dtype="int64"),
-                    "first_uri": cols["first_uri"],
-                    "gzipped": pd.Series(cols["gzipped"], dtype="bool"),
-                }
-            )
-
-    return docs.mapInPandas(run, WARC_META_SCHEMA)
+    return walker_query(spark, sf_dir, walk, WARC_META_SCHEMA)
 
 
 WARC_EXTRACT_SCHEMA = T.StructType(
@@ -669,35 +644,15 @@ def warc_text_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     text must equal the source document bit-for-bit (the oracle
     selects it directly), so every layer — gzip CRC, WARC framing,
     HTTP split, charset decode — is on the oracle path."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        recs = parse_warc(encode_warc_http(d, text.encode("utf-8")))
+        resp = next(r for r in recs if r.rec_type == "response")
+        h = parse_http_response(resp.payload)
+        body_text = h.body.decode("utf-8")
+        yield (d, h.status, h.content_type, len(h.body), len(body_text),
+               body_text)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, sts, cts, nbs, ncs, txts = [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                recs = parse_warc(encode_warc_http(int(doc_id), data))
-                resp = next(r for r in recs if r.rec_type == "response")
-                h = parse_http_response(resp.payload)
-                ids.append(int(doc_id))
-                sts.append(h.status)
-                cts.append(h.content_type)
-                nbs.append(len(h.body))
-                body_text = h.body.decode("utf-8")
-                ncs.append(len(body_text))
-                txts.append(body_text)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "http_status": pd.Series(sts, dtype="int32"),
-                    "content_type": cts,
-                    "body_bytes": pd.Series(nbs, dtype="int64"),
-                    "body_chars": pd.Series(ncs, dtype="int32"),
-                    "body_text": txts,
-                }
-            )
-
-    return docs.mapInPandas(run, WARC_EXTRACT_SCHEMA)
+    return walker_query(spark, sf_dir, walk, WARC_EXTRACT_SCHEMA)
 
 
 WARC_EXTRACT_SQL = """
@@ -747,38 +702,14 @@ def warc_text_extraction_charset(spark: SparkSession, sf_dir: str) -> DataFrame:
     and an unknown codec name. Decoded text, byte/char counts, the
     declared token, and WHICH decoder fired are all closed forms the
     oracle computes from `documents` with string SQL."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        recs = parse_warc(encode_warc_http_charset(d, text))
+        resp = next(r for r in recs if r.rec_type == "response")
+        h = parse_http_response(resp.payload)
+        body_text, declared, fired = decode_http_body(h.body, h.content_type)
+        yield (d, declared, fired, len(h.body), len(body_text), body_text)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, dcl, fr, nbs, ncs, txts = [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                recs = parse_warc(
-                    encode_warc_http_charset(int(doc_id), text or "")
-                )
-                resp = next(r for r in recs if r.rec_type == "response")
-                h = parse_http_response(resp.payload)
-                body_text, declared, fired = decode_http_body(
-                    h.body, h.content_type
-                )
-                ids.append(int(doc_id))
-                dcl.append(declared)
-                fr.append(fired)
-                nbs.append(len(h.body))
-                ncs.append(len(body_text))
-                txts.append(body_text)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "declared": dcl,
-                    "fired": fr,
-                    "body_bytes": pd.Series(nbs, dtype="int64"),
-                    "body_chars": pd.Series(ncs, dtype="int32"),
-                    "body_text": txts,
-                }
-            )
-
-    return docs.mapInPandas(run, WARC_CHARSET_SCHEMA)
+    return walker_query(spark, sf_dir, walk, WARC_CHARSET_SCHEMA)
 
 
 # branch map mirrors encode_warc_http_charset; `a` is the printable-
@@ -836,36 +767,16 @@ def warc_content_encoding_extraction(spark: SparkSession, sf_dir: str) -> DataFr
     decoder fired, and the decoded text are all closed forms — so a
     silently-skipped inflate (mojibake) or a wrong-wrapper deflate
     path cannot hash-match the oracle."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        recs = parse_warc(encode_warc_http_ce(d, text))
+        resp = next(r for r in recs if r.rec_type == "response")
+        h = parse_http_response(resp.payload)
+        body_text, declared, fired, codec = decode_http_body_ce(
+            h.body, h.content_type, h.content_encoding
+        )
+        yield d, codec, declared, fired, len(body_text), body_text
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, cds, dcl, fr, ncs, txts = [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                recs = parse_warc(encode_warc_http_ce(int(doc_id), text or ""))
-                resp = next(r for r in recs if r.rec_type == "response")
-                h = parse_http_response(resp.payload)
-                body_text, declared, fired, codec = decode_http_body_ce(
-                    h.body, h.content_type, h.content_encoding
-                )
-                ids.append(int(doc_id))
-                cds.append(codec)
-                dcl.append(declared)
-                fr.append(fired)
-                ncs.append(len(body_text))
-                txts.append(body_text)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "codec": cds,
-                    "declared": dcl,
-                    "fired": fr,
-                    "body_chars": pd.Series(ncs, dtype="int32"),
-                    "body_text": txts,
-                }
-            )
-
-    return docs.mapInPandas(run, WARC_CE_SCHEMA)
+    return walker_query(spark, sf_dir, walk, WARC_CE_SCHEMA)
 
 
 # branch map mirrors encode_warc_http_ce; `a` is the printable-ASCII
@@ -954,32 +865,14 @@ def warc_chunked_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     extensions, trailer headers — see encode_warc_http_chunked). The
     chunk count is on the oracle path, so a concatenate-without-
     framing shortcut cannot match."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        recs = parse_warc(encode_warc_http_chunked(d, text.encode("utf-8")))
+        resp = next(r for r in recs if r.rec_type == "response")
+        h = parse_http_response(resp.payload)
+        yield (d, h.chunked, h.n_chunks, len(h.body),
+               h.body.decode("utf-8"))
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ck, ncs, nbs, txts = [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                recs = parse_warc(encode_warc_http_chunked(int(doc_id), data))
-                resp = next(r for r in recs if r.rec_type == "response")
-                h = parse_http_response(resp.payload)
-                ids.append(int(doc_id))
-                ck.append(h.chunked)
-                ncs.append(h.n_chunks)
-                nbs.append(len(h.body))
-                txts.append(h.body.decode("utf-8"))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "chunked": pd.Series(ck, dtype="bool"),
-                    "n_chunks": pd.Series(ncs, dtype="int32"),
-                    "body_bytes": pd.Series(nbs, dtype="int64"),
-                    "body_text": txts,
-                }
-            )
-
-    return docs.mapInPandas(run, WARC_CHUNKED_SCHEMA)
+    return walker_query(spark, sf_dir, walk, WARC_CHUNKED_SCHEMA)
 
 
 WARC_CHUNKED_SQL = """
@@ -1017,36 +910,13 @@ def warc_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout — a byte-exact differential of the walker's accounting."""
     import hashlib
 
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        recs = parse_warc_offsets(encode_warc_cdx(d, text.encode("utf-8")))
+        for seq, (rec, off, ln) in enumerate(recs):
+            yield (d, seq, rec.rec_type, rec.target_uri, off, ln,
+                   hashlib.sha256(rec.payload).hexdigest())
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, seqs, tys, uris, offs, lens, digs = [], [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                data = (text or "").encode("utf-8")
-                recs = parse_warc_offsets(encode_warc_cdx(d, data))
-                for seq, (rec, off, ln) in enumerate(recs):
-                    ids.append(d)
-                    seqs.append(seq)
-                    tys.append(rec.rec_type)
-                    uris.append(rec.target_uri)
-                    offs.append(off)
-                    lens.append(ln)
-                    digs.append(hashlib.sha256(rec.payload).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "rec_seq": pd.Series(seqs, dtype="int32"),
-                    "rec_type": tys,
-                    "target_uri": uris,
-                    "rec_offset": pd.Series(offs, dtype="int64"),
-                    "rec_length": pd.Series(lens, dtype="int64"),
-                    "payload_sha256": digs,
-                }
-            )
-
-    return docs.mapInPandas(run, WARC_CDX_SCHEMA)
+    return walker_query(spark, sf_dir, walk, WARC_CDX_SCHEMA)
 
 
 # Byte-exact closed forms of encode_warc_cdx (pinned by

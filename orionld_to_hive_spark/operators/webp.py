@@ -42,11 +42,10 @@ from __future__ import annotations
 import struct
 from typing import Iterator, NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 
 class WebpMeta(NamedTuple):
@@ -237,46 +236,24 @@ def multimodal_webp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed forms of doc_id, filler sized by the text) → triage. The
     RIFF walk, frame-tag arithmetic, VP8L bit unpack, and VP8X flag
     decode are all on the oracle path for every graded row."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, fm, ws, hs, al, an, nc = [], [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                w = 16 + d % 100
-                h = 16 + d % 57
-                fill = 8 + len((text or "").encode("utf-8")) % 64
-                if d % 3 == 0:
-                    raw = encode_webp_lossy(w, h, fill)
-                elif d % 3 == 1:
-                    raw = encode_webp_lossless(w, h, d % 2 == 0, fill)
-                else:
-                    raw = encode_webp_extended(
-                        w, h, d % 2 == 0, d % 4 == 0,
-                        exif=b"II*\x00" if d % 5 == 0 else None,
-                    )
-                m = parse_webp_meta(raw)
-                ids.append(d)
-                fm.append(m.fmt)
-                ws.append(m.width)
-                hs.append(m.height)
-                al.append(m.has_alpha)
-                an.append(m.has_anim)
-                nc.append(m.n_chunks)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "fmt": pd.Series(fm, dtype="object"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "has_alpha": pd.Series(al, dtype="bool"),
-                    "has_anim": pd.Series(an, dtype="bool"),
-                    "n_chunks": pd.Series(nc, dtype="int32"),
-                }
+    def walk(d: int, text: str):
+        w = 16 + d % 100
+        h = 16 + d % 57
+        fill = 8 + len(text.encode("utf-8")) % 64
+        if d % 3 == 0:
+            raw = encode_webp_lossy(w, h, fill)
+        elif d % 3 == 1:
+            raw = encode_webp_lossless(w, h, d % 2 == 0, fill)
+        else:
+            raw = encode_webp_extended(
+                w, h, d % 2 == 0, d % 4 == 0,
+                exif=b"II*\x00" if d % 5 == 0 else None,
             )
+        m = parse_webp_meta(raw)
+        yield (d, m.fmt, m.width, m.height, m.has_alpha, m.has_anim,
+               m.n_chunks)
 
-    return docs.mapInPandas(run, WEBP_SCHEMA)
+    return walker_query(spark, sf_dir, walk, WEBP_SCHEMA)
 
 
 # variant by doc_id mod 3; dims 16+id%100 / 16+id%57; alpha only on

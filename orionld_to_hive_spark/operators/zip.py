@@ -36,8 +36,9 @@ Strict audit profile (refusals are loud, never silent skips):
 
 100 TB posture: the walk is O(central directory) for the manifest and
 O(payload) only for the CRC pass, which is the point of the audit; it
-runs inside `mapInPandas` batches like every walker in this family,
-so archives parallelize across executors with zero shuffle.
+runs per document inside the one `walker_query` boundary like every
+walker in this family, so archives parallelize across executors with
+zero shuffle.
 
 Oracle strategy (the tar/mp4/warc construction): per document the
 fixture is a small archive whose member names/sizes are closed forms
@@ -51,13 +52,12 @@ import io
 import struct
 import zipfile
 import zlib
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 _EOCD_SIG = b"PK\x05\x06"
 _CDH_SIG = b"PK\x01\x02"
@@ -291,34 +291,12 @@ def zip_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the EOCD framing, CD walk, local-header cross-check, deflate
     inflation, and CRC-32 verification are all on the oracle path for
     every member of every archive."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        m = parse_zip_meta(encode_zip_sample(d, text.encode("utf-8")))
+        yield (d, m.n_entries, m.n_stored, m.n_deflated, m.total_bytes,
+               m.txt_bytes, m.crc_checked)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ne, ns, nd, tb, xb, cc = [], [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                m = parse_zip_meta(encode_zip_sample(int(doc_id), data))
-                ids.append(int(doc_id))
-                ne.append(m.n_entries)
-                ns.append(m.n_stored)
-                nd.append(m.n_deflated)
-                tb.append(m.total_bytes)
-                xb.append(m.txt_bytes)
-                cc.append(m.crc_checked)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "n_entries": pd.Series(ne, dtype="int32"),
-                    "n_stored": pd.Series(ns, dtype="int32"),
-                    "n_deflated": pd.Series(nd, dtype="int32"),
-                    "total_bytes": pd.Series(tb, dtype="int64"),
-                    "txt_bytes": pd.Series(xb, dtype="int64"),
-                    "crc_checked": pd.Series(cc, dtype="int32"),
-                }
-            )
-
-    return docs.mapInPandas(run, ZIP_SCHEMA)
+    return walker_query(spark, sf_dir, walk, ZIP_SCHEMA)
 
 
 # per doc: .txt = octet_length(text) deflated; .cls = 1 stored byte;

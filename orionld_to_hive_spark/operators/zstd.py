@@ -42,13 +42,12 @@ closed-form projection of the text — decoded, not just framed.
 """
 from __future__ import annotations
 
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from orionld_to_hive_spark.sources.warehouse import load_docs_spread
+from orionld_to_hive_spark.operators.walker import walker_query
 
 _MAGIC = 0xFD2FB528
 _SKIP_LO = 0x184D2A50
@@ -250,38 +249,13 @@ def zstd_frame_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     body_text strips the closed-form RLE tail and must equal the
     source text bit-for-bit — the Raw-block reassembly, FCS
     verification, and block arithmetic are all on the oracle path."""
-    docs = load_docs_spread(spark, sf_dir, "doc_id", "text")
+    def walk(d: int, text: str):
+        m = parse_zstd_meta(encode_zstd(d, text.encode("utf-8")))
+        yield (d, m.n_frames, m.n_skippable, m.n_blocks, m.content_bytes,
+               m.declared_bytes, m.checksum_frames,
+               m.decoded[: -(d % 9 + 1)].decode("utf-8"))
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, nf, ns, nb, cb, db, cf, bt = [], [], [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                data = (text or "").encode("utf-8")
-                m = parse_zstd_meta(encode_zstd(d, data))
-                rle_n = d % 9 + 1
-                ids.append(d)
-                nf.append(m.n_frames)
-                ns.append(m.n_skippable)
-                nb.append(m.n_blocks)
-                cb.append(m.content_bytes)
-                db.append(m.declared_bytes)
-                cf.append(m.checksum_frames)
-                bt.append(m.decoded[:-rle_n].decode("utf-8"))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "n_frames": pd.Series(nf, dtype="int32"),
-                    "n_skippable": pd.Series(ns, dtype="int32"),
-                    "n_blocks": pd.Series(nb, dtype="int32"),
-                    "content_bytes": pd.Series(cb, dtype="int64"),
-                    "declared_bytes": pd.Series(db, dtype="int64"),
-                    "checksum_frames": pd.Series(cf, dtype="int32"),
-                    "body_text": pd.Series(bt, dtype="object"),
-                }
-            )
-
-    return docs.mapInPandas(run, ZSTD_SCHEMA)
+    return walker_query(spark, sf_dir, walk, ZSTD_SCHEMA)
 
 
 # closed forms of encode_zstd: skippable for even ids; blocks =

@@ -213,8 +213,9 @@ _SPREAD_MIN_ROWS_PER_TASK = 8
 
 def load_docs_spread(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
     """`documents` projected to `cols` and round-robin-spread across
-    the session's cores — the input stage for every CPU-bound Python
-    walker/codec (`mapInPandas` fixture-synthesis + parse queries).
+    the session's cores — the input stage of
+    `operators.walker.walker_query`, the one boundary every CPU-bound
+    Python walker/codec query (fixture synthesis + parse) crosses.
 
     Why: the local corpus arrives as ONE parquet split, which pins a
     whole Python stage to a single worker (the jpeg codec measured
@@ -229,7 +230,7 @@ def load_docs_spread(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
     this spread used to end in `.orderBy("asset_id")` — a
     presentation-only total sort. Its RangePartitioning exchange
     samples partition bounds with a SEPARATE job that re-executes the
-    narrow mapInPandas stage above the round-robin shuffle, i.e. the
+    narrow Python stage above the round-robin shuffle, i.e. the
     whole Python walk ran TWICE per action, plus the sort shuffle
     itself. The driver's value hash and the in-repo oracle diff are
     order-insensitive, so the sorts were dropped fleet-wide; at

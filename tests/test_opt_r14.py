@@ -334,88 +334,6 @@ def test_stream_minima_plan_hash_aggregates(spark, tmp_path):
 
 
 # --------------------------------------------------------------------------
-# r14 second pass: fused single-crossing codec paths == staged twins
-
-
-def _rows(df):
-    return sorted(map(tuple, df.collect()))
-
-
-def test_fused_jpeg_stats_equals_staged(spark, sf_smoke):
-    from orionld_to_hive_spark.operators import jpeg as J
-
-    for enc in (J.encode_jpeg_gray_flat, J.encode_jpeg_color_flat,
-                J.encode_jpeg_cmyk_flat):
-        fused = J._fused_pixel_stats(spark, sf_smoke, enc)
-        staged = J.jpeg_pixel_stats(
-            J._assets_from_documents(spark, sf_smoke, enc)
-        )
-        assert _rows(fused) == _rows(staged), enc.__name__
-
-
-def test_fused_jpeg_selective_equals_staged(spark, sf_smoke):
-    from orionld_to_hive_spark.operators import jpeg as J
-
-    for min_rows in (J.JPEG_SELECT_MIN_ROWS, J.JPEG_TALL_MIN_ROWS):
-        fused = J._jpeg_selective(spark, sf_smoke, min_rows)
-        staged = J._jpeg_selective_staged(spark, sf_smoke, min_rows)
-        assert _rows(fused) == _rows(staged), min_rows
-
-
-def test_fused_gif_queries_equal_staged(spark, sf_smoke):
-    from orionld_to_hive_spark.operators import gif as G
-
-    assets = G.gif_assets_from_documents(spark, sf_smoke)
-    assert _rows(G.multimodal_gif_frames(spark, sf_smoke)) == _rows(
-        G.gif_frame_stats(assets)
-    )
-    assert _rows(G.multimodal_gif_anim_summary(spark, sf_smoke)) == _rows(
-        G.gif_anim_summary(assets)
-    )
-
-
-def test_fused_png_wav_queries_equal_staged(spark, sf_smoke):
-    from orionld_to_hive_spark.operators import multimodal as M
-
-    assert _rows(M.multimodal_png_stats(spark, sf_smoke)) == _rows(
-        M.png_pixel_stats(M.png_assets_from_documents(spark, sf_smoke))
-    )
-    assert _rows(
-        M.multimodal_png_palette_stats(spark, sf_smoke)
-    ) == _rows(
-        M.png_pixel_stats(
-            M.palette_png_assets_from_documents(spark, sf_smoke)
-        )
-    )
-    assert _rows(M.multimodal_wav_rms(spark, sf_smoke)) == _rows(
-        M.wav_audio_energy(M.wav_assets_from_documents(spark, sf_smoke))
-    )
-    assert _rows(M.multimodal_wav_mulaw_rms(spark, sf_smoke)) == _rows(
-        M.mulaw_audio_energy(
-            M.wav_mulaw_assets_from_documents(spark, sf_smoke)
-        )
-    )
-
-
-def test_fused_codec_plans_have_single_python_stage(spark, sf_smoke):
-    import re
-
-    from orionld_to_hive_spark.operators import gif as G
-    from orionld_to_hive_spark.operators import jpeg as J
-    from orionld_to_hive_spark.plans.explain import formatted
-
-    for df in (
-        J.multimodal_jpeg_stats(spark, sf_smoke),
-        J.multimodal_jpeg_cmyk_stats(spark, sf_smoke),
-        J.multimodal_jpeg_tall_stats(spark, sf_smoke),
-        G.multimodal_gif_frames(spark, sf_smoke),
-    ):
-        plan = formatted(df)
-        nodes = re.findall(r"^\(\d+\) MapInPandas", plan, re.M)
-        assert len(nodes) == 1, plan
-
-
-# --------------------------------------------------------------------------
 # size-gated gram-stream cache: cached == recomputed detection
 
 
@@ -511,6 +429,56 @@ def test_dc_fast_decode_adversarial_and_fallback(monkeypatch):
         J.encode_jpeg_gray_flat(np.frombuffer(b"hello world", dtype=np.uint8))
     )
     assert img.channels == 1 and calls == [True]
+
+
+def _traced_peak(fn):
+    import tracemalloc
+
+    tracemalloc.start()
+    try:
+        return fn(), tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+
+
+def test_dc_fast_decode_declines_oversized_entropy_segment():
+    # a valid 32x8 file with 1 MiB of extra entropy bytes: the decode
+    # result is unchanged, and the fast path declines before building
+    # its per-bit tables (which peaked at ~740x the payload)
+    import numpy as np
+
+    from orionld_to_hive_spark.operators import jpeg as J
+
+    base = J.encode_jpeg_gray_flat(np.frombuffer(b"abcd", dtype=np.uint8))
+    padded = base[:-2] + b"\x00" * (1 << 20) + base[-2:]
+    img, peak = _traced_peak(lambda: J.decode_jpeg(padded))
+    ref = J.decode_jpeg(base)
+    assert (img.width, img.height) == (ref.width, ref.height) == (32, 8)
+    assert np.array_equal(img.samples, ref.samples)
+    assert peak < 16 * len(padded), peak
+
+
+def test_decode_refuses_frame_larger_than_its_payload():
+    # SOF0 patched to 16384x16384 on a 149-byte file: 4M blocks cannot
+    # be coded in 1,192 bits, so the scan raises before sizing the
+    # (n_blocks, 64) coefficient arrays (2.1 GB) from the header
+    import struct
+
+    import numpy as np
+    import pytest
+
+    from orionld_to_hive_spark.operators import jpeg as J
+
+    base = J.encode_jpeg_gray_flat(np.frombuffer(b"abcd", dtype=np.uint8))
+    patched = bytearray(base)
+    struct.pack_into(">HH", patched, base.index(b"\xff\xc0") + 5, 16384, 16384)
+
+    def decode():
+        with pytest.raises(ValueError, match="blocks"):
+            J.decode_jpeg(bytes(patched))
+
+    _, peak = _traced_peak(decode)
+    assert peak < 1 << 20, peak
 
 
 def test_lut16_cache_is_bounded_and_decode_stays_exact(monkeypatch):

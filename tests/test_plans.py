@@ -3,6 +3,8 @@ properties that decide whether a plan survives 100× scale."""
 
 from __future__ import annotations
 
+import pytest
+
 from orionld_to_hive_spark.operators import cubes, parity, sketches, temporal, tpch, tpch2
 from orionld_to_hive_spark.plans.explain import (
     count_shuffles,
@@ -12,6 +14,7 @@ from orionld_to_hive_spark.plans.explain import (
     has_pushed_filter,
     read_schema_columns,
 )
+from orionld_to_hive_spark.registry import all_queries
 
 
 def test_q1_filter_is_pushed_to_scan(spark, sf_smoke):
@@ -685,18 +688,57 @@ def test_sitemap_plan_is_jvm_only(spark, sf_smoke):
     assert read_schema_columns(df) == ["doc_id"]
 
 
-def test_walker_stages_are_core_spread(spark, sf_smoke):
-    # Every Python walker query must fan its mapInPandas stage out
-    # across defaultParallelism (the single-split corpus would pin it
-    # to one task otherwise): the plan carries a round-robin exchange
-    # below the Python node.
-    from orionld_to_hive_spark.operators.pdf import multimodal_pdf_meta
-    from orionld_to_hive_spark.operators.zip import zip_manifest
+def _calls_walker(fn) -> bool:
+    """Whether `fn` — or a package function it names, transitively,
+    nested code included — calls walker_query."""
+    import inspect
 
-    for q in (multimodal_pdf_meta, zip_manifest):
-        plan = executed_plan(q(spark, sf_smoke))
-        assert "MapInPandas" in plan, plan[:500]
-        assert "roundrobin" in plan.lower(), plan[:500]
+    todo, seen = [fn], set()
+    while todo:
+        f = todo.pop()
+        if f in seen:
+            continue
+        seen.add(f)
+        names, codes = set(), [f.__code__]
+        while codes:
+            code = codes.pop()
+            names.update(code.co_names)
+            codes += [c for c in code.co_consts if inspect.iscode(c)]
+        if "walker_query" in names:
+            return True
+        todo += [
+            g for g in map(f.__globals__.get, names)
+            if inspect.isfunction(g)
+            and g.__module__.startswith("orionld_to_hive_spark.")
+        ]
+    return False
+
+
+WALKER_QUERIES = sorted(n for n, f in all_queries().items() if _calls_walker(f))
+
+
+def test_walker_family_is_discovered():
+    # every per-document codec query goes through walker_query; a
+    # shrinking count means a query grew its own boundary again
+    assert len(WALKER_QUERIES) == 43, WALKER_QUERIES
+
+
+@pytest.mark.parametrize("name", WALKER_QUERIES)
+def test_walker_query_plan_is_one_spread_python_stage(spark, sf_smoke, name):
+    # one Python crossing per walker query, fanned out across
+    # defaultParallelism by a round-robin exchange below it (the
+    # single-split corpus would pin it to one task otherwise), over a
+    # scan that reads only the two columns the walk consumes
+    import re
+
+    df = all_queries()[name](spark, sf_smoke)
+    plan = formatted(df)
+    tree = plan[: plan.index("(1) Scan")]
+    assert len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M)) == 1, plan
+    # the tree prints top-down: the spreading exchange sits below
+    assert tree.rindex("Exchange") > tree.index("MapInPandas"), tree
+    assert "RoundRobinPartitioning" in plan, plan
+    assert read_schema_columns(df) == ["doc_id", "text"], plan
 
 
 def _job_counts(spark, fn) -> tuple[int, int]:
